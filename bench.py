@@ -614,46 +614,6 @@ def _pairs_md(crawl: dict, lo: int, hi: int, factor) -> list[str]:
     return lines
 
 
-def _drift_md() -> list[str]:
-    """Query-suite drift investigation section, from the standing
-    tools/drift_ab.py artifact (round-4 verdict #4): a same-window A/B
-    of the warm-daemon session conf vs the stock daemon on the queries
-    that drifted r2 -> r4 on unchanged operator code."""
-    path = os.path.join(REPO, "BENCH", "drift_ab.json")
-    if not os.path.exists(path):
-        return []
-    with open(path) as f:
-        ab = json.load(f)
-    lines = [
-        "",
-        "### Query-suite drift on unchanged operators: same-window A/B",
-        "",
-        "ngram_jaccard_pairs (1.81 -> 2.67 s), sessionize (0.38 -> 0.53) and",
-        "minhash_lsh_dups (1.28 -> 1.69) drifted r2 -> r4 with zero code",
-        "diffs. `tools/drift_ab.py` isolates the one conf change in that",
-        "window — the warm worker daemon + PYTHONPATH export — by running",
-        "the subset in fresh JVMs, arms interleaved within one machine",
-        "window with the within-rep order counterbalanced (A/B, B/A, ...)",
-        "so the machine's monotone warm-up cannot favor either arm;",
-        "best-of-3 warm passes per child, per-rep paired deltas:",
-        "",
-        "| query | daemon on s | daemon off s | on - off | per-rep deltas |",
-        "|---|---|---|---|---|",
-    ]
-    for q, v in ab.get("queries", {}).items():
-        lines.append(
-            f"| {q} | {v['daemon_on']} | {v['daemon_off']} | {v['on_minus_off']} "
-            f"| {v.get('rep_deltas', [])} |"
-        )
-    lines += [
-        "",
-        f"Conclusion ({ab.get('reps')} reps x local[{ab.get('cores')}], "
-        f"max |delta| {ab.get('max_abs_delta')}s): **{ab.get('conclusion')}**.",
-        "",
-    ]
-    return lines
-
-
 def write_bench_md(queries: dict, crawl: dict, sf_dir: str, total: float) -> None:
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     # prefer the pair recorded with the crawl results (they may be from a
@@ -777,7 +737,6 @@ def write_bench_md(queries: dict, crawl: dict, sf_dir: str, total: float) -> Non
         "|---|---|",
     ]
     lines += [f"| {k} | {v} |" for k, v in sorted(queries.items())]
-    lines += _drift_md()
     lines += ["", f"Total bench wall: {round(total, 1)} s"]
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
@@ -791,10 +750,11 @@ def main() -> None:
     BENCH_T0 = time.time()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # a debug/smoke run with an overridden seed count must not clobber
-    # the official BENCH/ artifacts (BASELINE.md + crawl_cache.json)
-    # with numbers measured at a different problem size
-    official = "SPARK_GRAFT_BENCH_CRAWL_SEEDS" not in os.environ
+    # a debug/smoke run with any bench override (seeds, cores, deadline,
+    # pretouch, skip-crawl) must not clobber the official BENCH/
+    # artifacts (BASELINE.md + crawl_cache.json) with numbers measured
+    # under a different configuration
+    official = not any(k.startswith("SPARK_GRAFT_BENCH_") for k in os.environ)
     prune_bench_tmp()  # sweep orphans from crashed prior runs (ENOSPC guard)
     t0 = time.time()
     # CRAWL LEGS FIRST, query suite second. After machine idle the first
@@ -820,7 +780,7 @@ def main() -> None:
             # out of the interleaved pairs' budget
             _pretouch(
                 int(os.environ.get("SPARK_GRAFT_BENCH_PRETOUCH_GIB", "32")),
-                cap_s=120.0,
+                cap_s=float(os.environ.get("SPARK_GRAFT_BENCH_PRETOUCH_CAP_S", "120")),
             )
             crawl = run_crawl_bench()
             if official:

@@ -16,10 +16,10 @@ functions   column-level primitives: URL canonicalization/hashing, image
 sources     seed scans, the deterministic synthetic site resolver (the
             sandbox stand-in for HTTP fetch), and TableIO (Parquet +
             atomic manifest commits).
-operators   frontier dequeue, Bloom-shard seen set, token-bucket
-            politeness, robots filter, fetch/parse stages, dedup family,
-            similarity search.
-plans       the iterative crawl-loop driver and checkpoint/resume.
+operators   frontier dequeue, token-bucket politeness, robots filter,
+            fetch/parse stages, dedup family, similarity search.
+plans       the iterative crawl-loop driver (its seen filter is one exact
+            anti-join) and checkpoint/resume.
 streaming   Structured Streaming adapters for the metrics/event path.
 """
 

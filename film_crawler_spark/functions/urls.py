@@ -188,7 +188,8 @@ def n_pages(n_items: int, per_page: int) -> int:
     return -(-n_items // per_page) if n_items > 0 else 0
 
 
-def shard_col(url_col: Column, n_shards: int) -> Column:
+def shard_col(url_col: Column, n_shards: int = 64) -> Column:
     """Spark-side shard key — F.hash IS murmur3_x86_32(seed=42), so this
-    agrees with ``url_shard`` above (unit-tested parity)."""
+    agrees with ``url_shard`` above (unit-tested parity). The default is
+    the ``shard`` column of the seen and frontier tables."""
     return F.pmod(F.hash(url_col), F.lit(n_shards))

@@ -43,7 +43,6 @@ FETCHED_EXTRA = [
     T.StructField("fmt", T.StringType()),
     T.StructField("phash", T.LongType()),
 ]
-NON_FRONTIER_COLS = tuple(f.name for f in FETCHED_EXTRA)
 
 
 def fetched_schema(frontier_schema: T.StructType) -> T.StructType:
@@ -215,29 +214,3 @@ def fetch_log_projection(fetched: DataFrame, it: int) -> DataFrame:
         F.spark_partition_id().alias("partition_id"),
         F.length("body").alias("body_len"),
     ).withColumn("iteration", F.lit(it))
-
-
-def split_outcomes(fetched: DataFrame, pol: PolitenessConfig) -> dict[str, DataFrame]:
-    """Route fetch results: ok pages to parse, exhausted retries to
-    dead_letter, budget-denied rows back to the frontier, everything
-    attempted into the seen delta (matching the reference: a 404'd id is
-    never re-tried — its directory check 'exists', spiders.py:304-308,
-    because partial output was written; we model terminal = attempted)."""
-    attempted = fetched.filter(~F.col("budget_denied"))
-    frontier_cols = [
-        f.name for f in fetched.schema.fields if f.name not in NON_FRONTIER_COLS
-    ]
-    return {
-        "ok": attempted.filter(F.col("status") == 200),
-        # the dead-letter row carries the FULL frontier identity (the
-        # engine's remain.csv, reference spiders.py:2862-2872): repair
-        # re-enqueues these rows directly, preserving priority/seq so the
-        # replay order of a repair run is as deterministic as the crawl's
-        "dead": attempted.filter(F.col("status") != 200).select(
-            *[c for c in frontier_cols if c != "attempts"],
-            F.col("n_attempts").alias("attempts"),
-            F.concat(F.lit("http_"), F.col("status")).alias("last_error"),
-        ),
-        "seen_delta": attempted.select("canon_url", "url_hash", "shard", "host", "status"),
-        "denied": fetched.filter(F.col("budget_denied")).select(*frontier_cols),
-    }

@@ -7,10 +7,10 @@ out, checkpoint + metrics commit per epoch — see SURVEY.md §3.1):
     frontier(it) --[per-host top-B dequeue, salted two-phase]-->
     fetch (mapInPandas; token bucket; inline 500-retries) -->
     parse (discover links / titles / captions / decode blobs) -->
-    seen-filter (Bloom pre-probe + exact anti-join) -->
-    stage {frontier(it+1), seen Δ, bloom snapshot, titles Δ,
-           captions Δ, renditions Δ, images Δ, dead_letter Δ,
-           metrics Δ} --> atomic manifest commit(it)
+    seen-filter (one exact anti-join against seen + pending) -->
+    stage {frontier(it+1), seen Δ, titles Δ, captions Δ,
+           renditions Δ, images Δ, dead_letter Δ, metrics Δ}
+    --> atomic manifest commit(it)
 
 Structured Streaming is deliberately NOT used here: each iteration's
 discoveries are the next iteration's input (a feedback edge streaming
@@ -33,19 +33,18 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from film_crawler_spark.functions.urls import canonicalize_url
+from film_crawler_spark.functions.urls import canonicalize_url, shard_col
 from film_crawler_spark.operators import frontier as FR
 from film_crawler_spark.operators import parse as P
 from film_crawler_spark.operators import robots as ROB
 from film_crawler_spark.operators.fetch import fetch_batch, fetch_log_projection
 from film_crawler_spark.operators.politeness import PolitenessConfig
-from film_crawler_spark.operators.seen import BloomSeenSet, filter_unseen
 from film_crawler_spark.plans.fused_staging import stage_thin_tables as fused_stage
 from film_crawler_spark.sources.synthetic_site import SiteConfig, SyntheticSite
 from film_crawler_spark.sources.tableio import TableIO
 
 RESULT_TABLES = [
-    "frontier", "seen", "bloom", "titles", "captions", "sections", "reviews",
+    "frontier", "seen", "titles", "captions", "sections", "reviews",
     "persons", "credits", "renditions", "images", "dead_letter", "metrics",
     "fetch_log", "robots", "robots_denied",
     # round-2 entities: videos (F2), news (O5), ratings, person aux
@@ -60,17 +59,13 @@ class CrawlConfig:
     warehouse: str
     site: SiteConfig = field(default_factory=SiteConfig)
     politeness: PolitenessConfig = field(default_factory=PolitenessConfig)
-    n_shards: int = 64
-    bloom_bits: int = 1 << 23  # 1 MiB/shard: ~10^6 URLs at <1% FPR (seen.py sizing)
     n_salts: int = 8
     reverse_seeds: bool = True  # reference main.py:23 is_reverse=True
     max_iterations: int = 64
-    use_bloom: bool = True
-    # adaptive thresholds: below these sizes the extra shuffle of the
-    # salted dequeue phase / the Bloom pre-probe costs more than it saves
-    # (results are identical either way — these are physical choices)
+    # adaptive threshold: below this pending size the extra shuffle of
+    # the salted dequeue phase costs more than it saves (results are
+    # identical either way — a physical choice)
     salt_min_pending: int = 200_000
-    bloom_probe_min_seen: int = 2_000_000
     # every K iterations the hot log tables (seen; captions) are staged
     # as a full compacted base instead of a delta, so the per-iteration
     # re-read unions O(K) directories instead of O(crawl age). Purely a
@@ -93,7 +88,6 @@ def init_frontier(
     window (round-1 verdict wrong-item 2).
     """
     site = SyntheticSite(cfg.site)
-    bloom = BloomSeenSet(cfg.n_shards, cfg.bloom_bits)
     if isinstance(seed_ids, DataFrame):
         ids = seed_ids.select(F.col(seed_ids.columns[0]).alias("id")).distinct()
     else:
@@ -120,7 +114,7 @@ def init_frontier(
             "url",
             "canon_url",
             F.xxhash64("canon_url").alias("url_hash"),
-            bloom.shard_col(F.col("canon_url")).alias("shard"),
+            shard_col(F.col("canon_url")).alias("shard"),
             F.regexp_extract("url", r"https://([^/]+)/", 1).alias("host"),
             F.lit(0).alias("priority"),
             seqkey("rank").alias("seq"),
@@ -147,7 +141,6 @@ def _dedup_discovered(discovered: DataFrame) -> DataFrame:
 
 def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> dict:
     """Execute iteration ``it`` and commit. Returns summary counts."""
-    bloom_set = BloomSeenSet(cfg.n_shards, cfg.bloom_bits)
     pol = cfg.politeness
     t0 = time.time()
 
@@ -159,7 +152,6 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
     # no Spark job) drive the adaptive physical choices below
     prev = io.manifest(it - 1).get("summary", {}) if it - 1 in set(io.committed_iterations()) else {}
     pending_hint = prev.get("pending_next", prev.get("init_seeds", 0))
-    seen_hint = prev.get("seen_total", 0)
 
     # --- dequeue: per-kind budgets (reference throttles pages, not media) ---
     # The per-(host, kind-group) top-B window is what ENFORCES the
@@ -285,7 +277,7 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
         discovered_all = (
             _dedup_discovered(P.discover_links(ok.coalesce(dp)))
             .withColumn("url_hash", F.xxhash64("canon_url"))
-            .withColumn("shard", bloom_set.shard_col(F.col("canon_url")))
+            .withColumn("shard", shard_col(F.col("canon_url")))
             .withColumn("attempts", F.lit(0))
             .withColumn("discovered_at_iter", F.lit(it))
             .select(*[f.name for f in FR.FRONTIER_SCHEMA.fields])
@@ -355,28 +347,11 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
     do_compact = it > 0 and cfg.compact_every > 0 and it % cfg.compact_every == 0
     leftover = FR.remaining(pending, flog)
     frontier_cols = [f.name for f in FR.FRONTIER_SCHEMA.fields]
-    # Bloom maintenance is LAZY: below the probe threshold the bitmap is
-    # neither probed nor updated (a per-iteration cogroup+write bought
-    # nothing); on first crossing the threshold it is rebuilt once from
-    # the full seen log, then maintained incrementally. All decisions
-    # derive from committed manifests, so resume replays them identically.
-    maintain_bloom = cfg.use_bloom and seen_hint >= cfg.bloom_probe_min_seen
-    bloom_prev = io.read_snapshot("bloom", upto=it - 1) if maintain_bloom else None
-    if maintain_bloom and bloom_prev is not None:
-        # scale path: Bloom pre-probe shrinks the exact anti-join's probe
-        # side from |discovered| to |maybe-seen|. bloom_prev only covers
-        # through it-1, so this iteration's seen_delta is passed as the
-        # lag window — bloom-negative rows are anti-joined against it too
-        # (same-iteration re-discovery must not re-enqueue; T7).
-        unseen = filter_unseen(
-            discovered, all_seen.select("canon_url"), bloom_set, bloom_prev,
-            delta_exact=seen_delta.select("canon_url"),
-        )
-        new_rows = unseen.join(leftover.select("canon_url"), "canon_url", "left_anti").select(*frontier_cols)
-    else:
-        # small-seen path: one combined anti-join beats probe + two joins
-        exclusions = all_seen.select("canon_url").unionByName(leftover.select("canon_url"))
-        new_rows = discovered.join(exclusions, "canon_url", "left_anti").select(*frontier_cols)
+    # one combined anti-join: a discovery is new iff it is in neither the
+    # seen log (committed + this iteration's attempts) nor the leftover
+    # pending rows
+    exclusions = all_seen.select("canon_url").unionByName(leftover.select("canon_url"))
+    new_rows = discovered.join(exclusions, "canon_url", "left_anti").select(*frontier_cols)
 
     denied_rows = flog.filter(F.col("budget_denied")).select(*frontier_cols)
     next_pending = leftover.unionByName(denied_rows).unionByName(new_rows)
@@ -579,15 +554,6 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
         ("robots_tables", _stage_robots_tables),
         ("images", _stage_images),
     ]
-    if maintain_bloom:
-        # incremental merge normally; full rebuild from the seen log the
-        # first time the threshold is crossed (bloom_prev is None then)
-        bloom_src = seen_delta if bloom_prev is not None else all_seen
-        jobs.append(
-            ("bloom", lambda: io.stage(
-                bloom_set.merge(bloom_prev, bloom_src.select("shard", "url_hash")), "bloom", it
-            ))
-        )
     stage_s: dict[str, float] = {"fetch_log": fetch_log_s}
 
     def _timed(name, fn):
@@ -622,7 +588,7 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
         "pending_next_html": post_counts["pending_next_html"],
         "pending_next_media": n_pending_next - post_counts["pending_next_html"],
         "images": n_images,
-        "seen_total": seen_hint + n_fetched,
+        "seen_total": prev.get("seen_total", 0) + n_fetched,
         "n_robots": disc_info["n_robots"],
         "wall_s": round(time.time() - t0, 3),
         "fetch_s": t_fetch,

@@ -42,7 +42,7 @@ def probe_404(
 
     import pandas as pd
 
-    from film_crawler_spark.functions.urls import canonicalize_url
+    from film_crawler_spark.functions.urls import canonicalize_url, shard_col
 
     @F.pandas_udf("string")
     def entity_url(s):
@@ -74,7 +74,7 @@ def probe_404(
             "url",
             canon("url").alias("canon_url"),
             F.xxhash64(canon("url")).alias("url_hash"),
-            F.pmod(F.hash(canon("url")), F.lit(64)).cast("int").alias("shard"),
+            shard_col(canon("url")).alias("shard"),
             F.regexp_extract("url", r"https://([^/]+)/", 1).alias("host"),
             "priority", "seq",
             F.lit(0).alias("depth"),

@@ -41,7 +41,7 @@ def _url_frontier(spark: SparkSession, urls: list[tuple[str, str]], cfg: SiteCon
     """Tiny frontier batch for the generator fetches. ``urls``:
     [(url, page_kind)]. Seq is the list position (the reference fetches
     charts in a fixed order)."""
-    from film_crawler_spark.functions.urls import canonicalize_url, url_host
+    from film_crawler_spark.functions.urls import canonicalize_url, shard_col, url_host
 
     rows = [
         (
@@ -52,7 +52,7 @@ def _url_frontier(spark: SparkSession, urls: list[tuple[str, str]], cfg: SiteCon
     ]
     df = spark.createDataFrame(rows, FRONTIER_SCHEMA)
     return df.withColumn("url_hash", F.xxhash64("canon_url")).withColumn(
-        "shard", F.pmod(F.hash("canon_url"), F.lit(64)).cast("int")
+        "shard", shard_col(F.col("canon_url"))
     )
 
 

@@ -140,14 +140,18 @@ def run_supplement(
     _stage_counted(supp_log, "fetch_log", "refetched")
     summary["wall_s"] = round(time.time() - t0, 3)
     # carry the crawl's manifest hint chain forward: a resumed
-    # run_iteration(it+1) reads THIS summary for its seen/pending/robots
-    # hints — dropping them would read seen_total=0, silently disable
-    # bloom maintenance, and leave a stale bloom snapshot that re-admits
-    # already-fetched URLs (a T7 exactly-once violation). The supplement
-    # re-fetches only already-seen URLs and stages no frontier, so the
-    # previous values pass through unchanged.
+    # run_iteration(it+1) reads THIS summary for its hints. The pending
+    # counts pick the salted dequeue and prove the dequeue window can be
+    # skipped; n_robots decides whether the robots snapshot is restaged;
+    # seen_total is the running seen-set size the next summary extends.
+    # Every choice they drive is physical, so dropping them changes no
+    # row, but it re-runs the dequeue window, restages robots and resets
+    # the reported seen_total. The supplement re-fetches only already-
+    # seen URLs and stages no frontier, so the previous values pass
+    # through unchanged.
     prev = io.manifest(last).get("summary", {})
-    for key in ("seen_total", "pending_next", "init_seeds", "n_robots"):
+    for key in ("seen_total", "pending_next", "pending_next_html", "pending_next_media",
+                "init_seeds", "n_robots"):
         if key in prev:
             summary[key] = prev[key]
     io.commit(it, staged, extra={"summary": summary, "supplement": True})

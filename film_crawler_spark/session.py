@@ -42,19 +42,14 @@ def engine_conf(shuffle_partitions: int | str = "32") -> dict[str, str]:
     # The repo root rides PYTHONPATH so the daemon module resolves in
     # executor-side processes (PythonWorkerFactory merges the system
     # PYTHONPATH + spark.executorEnv.PYTHONPATH into the worker env).
-    # SPARK_GRAFT_WARM_DAEMON=0 reverts to the stock daemon — the knob
-    # exists for the drift A/B control (tools/drift_ab.py): it isolates
-    # this round-4 conf addition from host drift when chasing query-
-    # suite timing changes on otherwise-unchanged code.
-    if os.environ.get("SPARK_GRAFT_WARM_DAEMON", "1") != "0":
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        py_path = os.environ.get("PYTHONPATH", "")
-        if repo_root not in py_path.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                repo_root + (os.pathsep + py_path if py_path else "")
-            )
-        conf["spark.executorEnv.PYTHONPATH"] = os.environ["PYTHONPATH"]
-        conf["spark.python.daemon.module"] = "film_crawler_spark.daemon_warm"
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    py_path = os.environ.get("PYTHONPATH", "")
+    if repo_root not in py_path.split(os.pathsep):
+        os.environ["PYTHONPATH"] = (
+            repo_root + (os.pathsep + py_path if py_path else "")
+        )
+    conf["spark.executorEnv.PYTHONPATH"] = os.environ["PYTHONPATH"]
+    conf["spark.python.daemon.module"] = "film_crawler_spark.daemon_warm"
     conf.update({
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_AQE", "true"),

@@ -5,13 +5,13 @@ policy the engine distributes: the reference's loop semantics (sort →
 reverse → epoch-slice → skip-if-seen → paginate → download; reference
 spiders.py:85-99, 172-173, 208-308, 705-790, 2936-2961) expressed over
 the same synthetic site and the same per-host budgets. No Spark, no
-partitioning, no Bloom filters — just ordered lists and sets.
+partitioning, no joins — just ordered lists and sets.
 
 The engine's correctness gate (BASELINE.json: "exact frontier ordering
 per host + identical final URL-seen set") is an equality assertion
 between this simulator's trace and the engine's committed tables. If
-the distributed dequeue (salted two-phase top-k), the Bloom+anti-join
-seen filter, or the commit protocol ever reorder or lose a URL, the
+the distributed dequeue (salted two-phase top-k), the anti-join seen
+filter, or the commit protocol ever reorder or lose a URL, the
 golden tests catch it.
 """
 

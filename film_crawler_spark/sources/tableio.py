@@ -105,14 +105,6 @@ class TableIO:
             json.dump(manifest, f)
         os.replace(tmp, self._commit_path(iteration))
 
-    def rollback_uncommitted(self, iteration: int, tables: list[str]) -> None:
-        """Drop staged-but-uncommitted data (crash cleanup; optional since
-        stage() is overwrite-idempotent)."""
-        if os.path.exists(self._commit_path(iteration)):
-            raise ValueError(f"iteration {iteration} is committed; refusing rollback")
-        for t in tables:
-            shutil.rmtree(self._tdir(t, iteration), ignore_errors=True)
-
     # -- read side --------------------------------------------------------------
 
     def committed_iterations(self) -> list[int]:
@@ -175,7 +167,7 @@ class TableIO:
 
     def read_snapshot(self, table: str, upto: int | None = None) -> DataFrame | None:
         """Latest committed snapshot (snapshot tables: frontier pending,
-        bloom shards)."""
+        robots)."""
         dirs = self._committed_dirs(table, upto)
         if not dirs:
             return None

@@ -343,15 +343,16 @@ def test_robots_respected(crawled, sim):
 # crawl -> supplement -> resumed crawl == uninterrupted crawl (round-4
 # verdict item #5). The supplement commit sits BETWEEN two crawl
 # iterations and forwards the manifest hint chain (seen_total /
-# pending_next / pending_next_html / n_robots, plans/supplement.py) that
-# the next run_iteration's dequeue-skip proof and bloom maintenance
-# consume. A wrong hint would silently change physical plans while
-# staying replay-identical by design — so this gate pins exactly that:
-# every sink table and the per-host fetch order must match the
-# uninterrupted crawl byte-for-byte, modulo the one documented artifact
-# of interleaving (the supplement consumes one iteration number, so all
-# later iteration-derived values shift by exactly +1 — the comparison
-# remaps them back rather than dropping them).
+# pending_next / pending_next_html / pending_next_media / n_robots,
+# plans/supplement.py) that the next run_iteration's dequeue-skip proof
+# and robots restage decision consume. A wrong hint would silently
+# change physical plans while staying replay-identical by design — so
+# this gate pins exactly that: every sink table and the per-host fetch
+# order must match the uninterrupted crawl byte-for-byte, modulo the
+# one documented artifact of interleaving (the supplement consumes one
+# iteration number, so all later iteration-derived values shift by
+# exactly +1 — the comparison remaps them back rather than dropping
+# them).
 
 from collections import Counter
 

@@ -59,11 +59,11 @@ def test_supplement_appends_exactly_new_children(spark, warehouse):
     crawl_summary = io.manifest(io.last_committed())["summary"]
     s = run_supplement(spark, cfg)
     # the manifest hint chain must survive a supplement commit: a resumed
-    # run_iteration reads seen_total/pending_next/n_robots from the LAST
-    # summary — dropping them silently disables (then stales) bloom
-    # maintenance, a T7 exactly-once violation
+    # run_iteration reads its pending counts (dequeue-skip proof), n_robots
+    # (robots restage) and the running seen_total from the LAST summary
     supp_summary = io.manifest(io.last_committed())["summary"]
-    for key in ("seen_total", "pending_next", "n_robots"):
+    for key in ("seen_total", "pending_next", "pending_next_html", "pending_next_media",
+                "n_robots"):
         assert supp_summary[key] == crawl_summary[key], key
     assert s["reviews_new"] == EXTRA * ok_pages["reviews"]
     assert s["news_new"] == EXTRA * ok_pages["news"]

@@ -4,18 +4,16 @@ actually fire (round-3 verdict stretch item; blob leg added round 5).
 
 The official bench (bench.py) crawls small seed sets to frontier
 exhaustion and measures N->4N scaling; at that scale the adaptive
-thresholds keep the scale machinery OFF (exact anti-join instead of the
-Bloom pre-probe, single-phase dequeue, no compaction inside the short
-crawl). This tool runs configs that turn each mechanism ON and records,
-from the commit manifests alone:
+thresholds keep the scale machinery OFF (single-phase dequeue, no
+compaction inside the short crawl). This tool runs configs that turn
+each mechanism ON and records, from the commit manifests alone:
 
 * the salted two-phase dequeue active from iteration 0
   (pending >= salt_min_pending = 200k),
-* the Bloom threshold crossing (seen >= 2,000,000): the one-time full
-  rebuild from the seen log, then incremental per-iteration merges,
 * periodic log compaction (seen/captions staged as full bases),
-* peak frontier size and end-to-end fetch throughput at sustained
-  politeness-budget saturation,
+* peak frontier and seen-set size, and end-to-end fetch throughput at
+  sustained politeness-budget saturation (the seen filter is one exact
+  anti-join against the seen log at every size),
 * (blob config) media waves against a multi-million-row frontier: the
   blob pipeline fetching while pending >= 10^6, with the caption-join
   broadcast bounded by each iteration's own rm count.
@@ -23,10 +21,9 @@ from the commit manifests alone:
 Two standing configs (BENCH/SCALE.md carries both):
 
   frontier config — 10^6 seeds, html-dominated BFS: exercises the
-    frontier/seen/Bloom/compaction machinery at a 15M-row frontier.
-    The default 24 iterations keep the budget saturated until seen
-    crosses the production Bloom threshold (2,000,000) — round 4's 17
-    iterations stopped at 1.31M seen and never crossed.
+    frontier/seen/compaction machinery at a 15M-row frontier. The
+    default 24 iterations keep the budget saturated until the seen set
+    passes 2,000,000 URLs.
     `python tools/scale_run.py --label frontier`
 
   blob config — 3x10^4 seeds, max_images_per_title=48: depth 0-3 drain
@@ -45,7 +42,6 @@ iteration budget-saturated (4 www + 4 img hosts); the frontier config's
 max_images_per_title=12 bounds blob bytes so that run measures frontier
 / seen-set mechanics (bench.py owns blob-throughput measurement);
 compact_every=4 makes the compaction cadence visible inside the window.
-Bloom threshold stays at its production default in both configs.
 
 Usage:  python tools/scale_run.py [--seeds N] [--iterations N]
           [--max-images N] [--label NAME] [--append] [--out PATH]
@@ -71,9 +67,8 @@ DOC_HEADER = [
     "# SCALE — large-frontier legs (local[32])",
     "",
     "Evidence that the 10^10-URL design mechanisms fire at scale:",
-    "the production-default Bloom threshold crossing, incremental Bloom",
-    "maintenance, periodic log compaction, salted dequeue, a",
-    "multi-million-row frontier, and (blob config) the media pipeline",
+    "periodic log compaction, salted dequeue, a multi-million-row",
+    "frontier and seen set, and (blob config) the media pipeline",
     "running against that frontier — all extracted from each run's",
     "commit manifests. Produced by `python tools/scale_run.py`",
     "(config rationale in its docstring).",
@@ -156,8 +151,6 @@ def main() -> None:
     }
 
     rows = []
-    bloom_rebuild_it = None
-    bloom_incremental = []
     compactions = []
     for i in io.committed_iterations():
         m = io.manifest(i)
@@ -165,12 +158,6 @@ def main() -> None:
         if i < 0:
             init_seeds = s.get("init_seeds")
             continue
-        has_bloom = "bloom" in m["tables"] and os.path.exists(io._tdir("bloom", i))
-        # the rebuild is the first iteration whose manifest stages bloom
-        if has_bloom and bloom_rebuild_it is None:
-            bloom_rebuild_it = i
-        elif has_bloom:
-            bloom_incremental.append(i)
         if m.get("bases"):
             compactions.append((i, sorted(m["bases"])))
         rows.append(
@@ -182,7 +169,6 @@ def main() -> None:
                 "images": s.get("images", 0),
                 "pending_next": s.get("pending_next"),
                 "seen_total": s.get("seen_total"),
-                "bloom": "rebuild" if i == bloom_rebuild_it else ("merge" if has_bloom else ""),
                 "compacted": ",".join(m.get("bases", {})) if m.get("bases") else "",
                 "wall_s": s.get("wall_s"),
             }
@@ -221,8 +207,6 @@ def main() -> None:
         "fetches_per_s": round(total_fetched / wall, 1),
         "peak_frontier": peak_frontier,
         "seen_final": seen_final,
-        "bloom_rebuild_iteration": bloom_rebuild_it,
-        "bloom_incremental_iterations": bloom_incremental,
         "compaction_iterations": [i for i, _ in compactions],
         "blob_iterations_at_1M_pending": blob_its_at_scale,
         "max_iteration_images": max_iter_images,
@@ -235,16 +219,16 @@ def main() -> None:
         f"Seed list: {args.seeds:,} rows (tab-sep CSV scanned by Spark, "
         f"{init_seeds:,} distinct after the S1 dedup+sort).",
         f"Politeness: 32768 html + 32768 img per host per iteration; "
-        f"compact_every=4; bloom threshold 2,000,000 (production default).",
+        f"compact_every=4.",
         "",
-        "| it | fetched | ok | blobs | images | pending next | seen total | bloom | compacted | wall s |",
-        "|---|---|---|---|---|---|---|---|---|---|",
+        "| it | fetched | ok | blobs | images | pending next | seen total | compacted | wall s |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
     for r in rows:
         md.append(
             "| {it} | {fetched:,} | {ok:,} | {blobs:,} | {images:,} "
             "| {pending_next:,} | {seen_total:,} "
-            "| {bloom} | {compacted} | {wall_s} |".format(**r)
+            "| {compacted} | {wall_s} |".format(**r)
         )
     md += [
         "",
@@ -260,21 +244,7 @@ def main() -> None:
         f"* **Salted two-phase dequeue** from iteration 0: pending "
         f"({init_seeds:,}+) >= salt_min_pending (200,000) every iteration.",
         # honest-by-construction: each mechanism bullet is asserted only
-        # when the manifests show it fired (round-4 advice — an earlier
-        # revision emitted the Bloom bullet unconditionally)
-        (
-            f"* **Bloom threshold crossing** at iteration {bloom_rebuild_it}: "
-            f"seen crossed 2,000,000, the bitmap was rebuilt ONCE from the full "
-            f"seen log, then maintained incrementally at iterations "
-            f"{', '.join(str(i) for i in bloom_incremental)} (delta-merge only); "
-            f"the seen filter switched from the single exact anti-join to "
-            f"Bloom pre-probe + exact join on the maybe-seen remainder."
-            if bloom_rebuild_it is not None
-            else f"* **Bloom threshold NOT crossed** in this run (final seen set "
-            f"{seen_final:,} < 2,000,000): the seen filter stayed on the exact "
-            f"anti-join path throughout — the crossing is evidenced by the "
-            f"frontier config's section, not this one."
-        ),
+        # when the manifests show it fired
         (
             f"* **Log compaction** at iterations "
             f"{', '.join(str(i) for i, _ in compactions)}: "
@@ -315,10 +285,8 @@ def main() -> None:
         ),
         "",
         "At the 10^10 target the same manifest-driven decisions hold: the",
-        "thresholds are config, the Bloom bitmap is sharded (64 x 1 MiB",
-        "here; shard count scales with the seen set), and each mechanism",
-        "claimed above is claimed only where this run's manifests show it",
-        "firing.",
+        "thresholds are config, and each mechanism claimed above is claimed",
+        "only where this run's manifests show it firing.",
         "",
     ]
     os.makedirs(os.path.dirname(args.out), exist_ok=True)
