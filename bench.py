@@ -417,13 +417,12 @@ def run_crawl_bench() -> dict:
     pairs: list[dict] = []
     pair_cost = None
     for pair_i in range(2):
-        # pair 2's estimate is pair 1's measured cost, not an inflated
-        # multiple of it: pair 2 runs on a machine pair 1 just warmed
-        # (every observed pair 2 has been <= pair 1), so padding the
-        # estimate only converts marginal windows into dropped pairs —
-        # and a dropped pair costs the protocol its same-window median
+        # pair 2's estimate is pair 1's measured cost with a modest pad:
+        # pair 2 usually runs on a machine pair 1 just warmed, but host
+        # drift of up to ~85% on identical legs is on record, and a pair
+        # that overruns the deadline loses every artifact of the run
         if pair_i > 0 and _over_budget(
-            (pair_cost or 600) + 30, f"interleaved pair {pair_i + 1}"
+            (pair_cost or 600) * 1.05 + 30, f"interleaved pair {pair_i + 1}"
         ):
             out["pairs_skipped"] = f"budget: pair {pair_i + 1} dropped"
             break
@@ -650,7 +649,7 @@ def write_bench_md(queries: dict, crawl: dict, sf_dir: str, total: float) -> Non
         "hour to hour. Within one session, identical code and protocol",
         "measured 2-core walls of 522-689 s and 8-core walls of 179-331 s;",
         "the cleanest same-window pair (586.7 s / 178.8 s, exact pins, warm",
-        "machine, tools/iter_profile.py) gives 0.82, while windows where the",
+        "machine) gives 0.82, while windows where the",
         "Spark-free hardware probe itself degrades (6.6 -> 7.3+ core-ms/blob)",
         "read as low as 0.61. The drift is bandwidth-shaped and suppresses",
         "the high-core leg more, so a single degraded-window reading",
@@ -674,31 +673,6 @@ def write_bench_md(queries: dict, crawl: dict, sf_dir: str, total: float) -> Non
             f"efficiencies against their per-pair machine columns instead.",
             "",
         ] if crawl.get("machine_efficiency") else []),
-        "### Where the efficiency goes (event-log decomposition)",
-        "",
-        "One same-window 2-core/8-core pair was run with full event logs",
-        "(tools/stage_profile.py) in a degraded window (walls 608.3 s /",
-        "222.9 s, raw efficiency 0.682) and decomposes exactly:",
-        "",
-        "* **executor-work inflation 1.30x** — the same crawl costs 1485.9",
-        "  executor-seconds at 8 cores vs 1139.0 at 2. The two media fetch",
-        "  stages (>70% of all executor time) inflate 1.16-1.20x — the",
-        "  DRAM-bandwidth effect the Spark-free machine probe measures on",
-        "  this box — while small staging stages inflate ~2x because task",
-        "  count scales with cores and their cost is per-task fixed overhead.",
-        "* **utilization 83.3% vs 93.6%** — idle-core time is ~37 s at 8",
-        "  cores and ~39 s at 2: the same ABSOLUTE per-iteration driver",
-        "  floor (commit barriers, job scheduling, staging-pool critical",
-        "  path) in both legs, which costs the 4x-shorter leg 4x more",
-        "  relative wall. (1/1.30) x (0.833/0.936) = 0.682, the measured",
-        "  ratio, with no unexplained residual.",
-        "",
-        "Both terms shrink with scale: the floor amortizes with ~1000x more",
-        "work per politeness round at a 10^10-URL frontier (BENCH/SCALE.md's",
-        "10^6-seed leg sustains 3013 pages/s over 17 iterations), and the",
-        "bandwidth term is the box's own ceiling, which the per-leg machine",
-        "probes report next to every pair above.",
-        "",
         "Politeness budgets are independent of parallelism, so the ratio measures",
         "engine overhead, not budget relaxation (BASELINE.md measurement plan).",
         "",
@@ -709,27 +683,6 @@ def write_bench_md(queries: dict, crawl: dict, sf_dir: str, total: float) -> Non
         "added core up to 8 processes but only ~0.71 from 8 to 32 processes",
         "(DRAM-bandwidth / turbo ceiling: 6.6 -> 9.3 core-ms/blob). Above 8 cores",
         "the pair would measure the box, not the engine — hence 2 vs 8.",
-        "",
-        "Protocol note (round 4): earlier rounds pinned each leg to N + 2 CPUs",
-        "('+2 for the driver'). That was sound while the crawl was",
-        "barrier-dominated (~48 small politeness waves keep the driver CPUs",
-        "doing driver work at both levels), but round 4's crawl drains the",
-        "same page set in 6 compute-dominated BFS waves — executor-side",
-        "Python workers spill into the +2 headroom, handing the 2-core leg",
-        "2x extra compute vs 1.25x at 8 cores and capping measurable",
-        "efficiency at (N+2)/4N ~= 0.62 for a perfectly scaling engine",
-        "(measured: the same 2-core crawl ran 501 s on 4 CPUs vs 587 s on 2).",
-        "Exact-N pinning restores a true 4x CPU ratio; the driver work it",
-        "folds in (Catalyst planning for the ~10 staging jobs x 6 iterations,",
-        "py4j, commit manifests) is ~3% of leg wall and symmetric across",
-        "legs. Per-iteration decomposition (tools/iter_profile.py): the two",
-        "media waves carry ~80% of wall and scale at ~0.95-1.0; the residual",
-        "loss is the per-iteration staging-pool floor (~4-5 s/iteration at 8",
-        "cores), which a real cluster amortizes with ~1000x more work per",
-        "politeness round at a 10^10-URL frontier. The remaining single-box",
-        "lever is cross-iteration pipelining (start fetch of it+1 once its",
-        "frontier is staged) — deliberately not taken: it relaxes the",
-        "manifest-visibility contract the resume/replay gates depend on.",
         "",
         "## Query suite (seconds, noop-sink forced)",
         "",

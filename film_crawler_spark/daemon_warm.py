@@ -7,7 +7,7 @@ pandas + pyarrow import (~0.5 s). Under the crawl's concurrent staging
 pool that fork-and-import happens repeatedly mid-iteration (worker
 reuse misses under churn: many short Python stages from ~10 concurrent
 jobs), which showed up in the event logs as ~+10 core-s per concurrent
-Python stage at local[8] (tools/timeline_profile.py).
+Python stage at local[8] (event logs read with tools/stage_profile.py).
 
 Importing the heavy modules HERE — once, in the daemon, before any
 fork — makes every worker inherit them through fork's copy-on-write

@@ -102,19 +102,6 @@ def with_shingles(docs: DataFrame, text_col: str, n: int, out: str) -> DataFrame
     )
 
 
-def word_shingles(text_col, n: int = 3):
-    """One-shot shingle Column — convenience for small inputs; prefer
-    with_shingles in operators (this form re-evaluates the split per
-    index, see shingles_of_words)."""
-    words = words_expr(text_col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        )
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     block_col: str = "source",

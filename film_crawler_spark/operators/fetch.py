@@ -146,7 +146,7 @@ def fetch_batch(
     # stage's tail (longest-processing-time-first packing). With html
     # first, the last wave was all media — one 2-3x-skewed blob task
     # left the other cores idle behind it (measured: maxT 19.5 s vs
-    # 8.5 s mean on a mixed wave at local[8], stage_profile).
+    # 8.5 s mean on a mixed wave at local[8], tools/stage_profile.py).
     return media.unionByName(html)
 
 

@@ -827,11 +827,6 @@ extract_event_awards = _thin_extractor("event", _rows_event_awards, EVENT_AWARD_
 extract_companies = _thin_extractor("company", _rows_companies, COMPANY_BASE_SCHEMA)
 
 
-def extract_events(fetched_ok: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Returns (events_base, event_awards) — see the row parsers above."""
-    return extract_events_base(fetched_ok), extract_event_awards(fetched_ok)
-
-
 def _rows_company_films(r, body):
     """Company search-result pages -> 15-field film rows + (co, page, ord)
     (reference get_curPage_co, spiders.py:3352-3437)."""

@@ -31,10 +31,6 @@ def token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(r"\S+"), F.lit(0)))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def _occurrences(padded: Column, word: str) -> Column:
     """Occurrences of ' word ' in the space-padded, lowercased text.
     (length delta) / len(needle) — pure string math, engine-portable."""
@@ -62,10 +58,6 @@ def lang_scores_from(padded: Column) -> dict[str, Column]:
         lang: sum((_occurrences(padded, w) for w in words), F.lit(0))
         for lang, words in LANG_MARKERS.items()
     }
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    return lang_scores_from(padded_lower(text))
 
 
 def lang_id_from(padded: Column) -> Column:

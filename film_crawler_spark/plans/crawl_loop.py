@@ -18,6 +18,16 @@ cannot express) and exact replayable ordering is part of the contract.
 The loop is a driver-side ``for`` over fully declarative DataFrame jobs;
 nothing is ever collected to the driver except tiny summary counts.
 
+Each iteration stages fetch_log first, then runs its staging work as a
+declared list of ``(name, fn, after)`` stages (``_run_stages``): every
+stage gets its own thread and waits only for the stages in its
+``after``. Every Spark job carries the description ``it=<i>/<stage>``
+(``plan`` for the driver-thread reads between stages, ``it=-1/init``
+for the seed frontier), so an event log maps executor time to crawl
+stages (tools/stage_profile.py). The commit manifest's summary records
+the iteration's trace: ``stages`` ({name: [start_s, end_s]} from the
+iteration start) and ``decisions`` (the adaptive choices taken).
+
 Resume: ``run_crawl`` with the same warehouse continues after the last
 committed iteration — killed mid-iteration, the partial stage dirs are
 overwritten idempotently on re-run (TableIO contract), so an
@@ -26,8 +36,8 @@ interrupted crawl converges to byte-identical tables (tested).
 
 from __future__ import annotations
 
-import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -42,6 +52,10 @@ from film_crawler_spark.operators.politeness import PolitenessConfig
 from film_crawler_spark.plans.fused_staging import stage_thin_tables as fused_stage
 from film_crawler_spark.sources.synthetic_site import SiteConfig, SyntheticSite
 from film_crawler_spark.sources.tableio import TableIO
+
+# every Spark job of a crawl iteration carries ``it=<i>/<stage>`` here, so
+# event-log executor time maps to crawl stages (tools/stage_profile.py)
+_DESC = "spark.job.description"
 
 RESULT_TABLES = [
     "frontier", "seen", "titles", "captions", "sections", "reviews",
@@ -139,8 +153,46 @@ def _dedup_discovered(discovered: DataFrame) -> DataFrame:
     return discovered.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
+def _run_stages(sc, it: int, t0: float, stages: list[tuple]) -> tuple[dict, dict]:
+    """Run ``(name, fn, after)`` stages, each on its own thread. A stage
+    starts once the stages named in its ``after`` (declared earlier in
+    the list) have finished, and is called with their results. Every
+    Spark job a stage launches is labelled ``it=<it>/<name>``. Returns
+    ``({name: result}, {name: [start_s, end_s]})``, times relative to
+    ``t0``; a stage error propagates once every thread has finished."""
+    futures: dict = {}
+    spans: dict[str, list[float]] = {}
+
+    def run(name, fn, after):
+        deps = [futures[d].result() for d in after]
+        sc.setLocalProperty(_DESC, f"it={it}/{name}")
+        start = time.time()
+        try:
+            return fn(*deps)
+        finally:
+            spans[name] = [round(start - t0, 3), round(time.time() - t0, 3)]
+            sc.setLocalProperty(_DESC, None)
+
+    with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+        for name, fn, after in stages:
+            if not set(after) <= futures.keys():
+                raise ValueError(f"stage {name!r}: after={after} names a stage not declared before it")
+            futures[name] = pool.submit(run, name, fn, after)
+        return {name: f.result() for name, f in futures.items()}, spans
+
+
 def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> dict:
     """Execute iteration ``it`` and commit. Returns summary counts."""
+    sc = spark.sparkContext
+    # driver-thread jobs (snapshot/log reads) between the stages
+    sc.setLocalProperty(_DESC, f"it={it}/plan")
+    try:
+        return _iteration(spark, io, cfg, it)
+    finally:
+        sc.setLocalProperty(_DESC, None)
+
+
+def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> dict:
     pol = cfg.politeness
     t0 = time.time()
 
@@ -168,15 +220,13 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
     hint_media = prev.get("pending_next_media")
     if hint_html is None and "init_seeds" in prev:
         hint_html, hint_media = prev["init_seeds"], 0  # seeds are all pages
-    if (
+    skip_window = (
         hint_html is not None
         and hint_html <= pol.budget_html
         and hint_media is not None
         and hint_media <= pol.budget_img
-    ):
-        dequeued = pending
-    else:
-        dequeued = FR.dequeue(pending, pol.budget_html, pol.budget_img, n_salts)
+    )
+    dequeued = pending if skip_window else FR.dequeue(pending, pol.budget_html, pol.budget_img, n_salts)
 
     # --- fetch (persist: feeds parse x4, metrics, seen delta) ---
     # sortWithinPartitions(page_kind) before persist: the in-memory cache
@@ -200,51 +250,38 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
         .sortWithinPartitions("page_kind")
         .persist()
     )
+
     # fetch_log: every non-body column + partition id + body length. It
-    # is staged FIRST, synchronously, and in the SAME job that executes
-    # the fetch and materializes the cache: the write scans `fetched`
-    # through the persist, so one job pays fetch + cache fill + the
-    # body-free projection. (Previously a separate eager agg materialized
-    # the cache and a second pass projected it into fetch_log — two
-    # sequential full scans of the fat body cache per iteration, a
-    # measured share of the per-iteration driver floor.) The eager
-    # materialization matters because the staging fan-out below runs ~8
-    # concurrent jobs that all consume this cache — launched cold, they
-    # convoy on the per-partition cache locks while the first computes.
-    # Every bookkeeping count (fetched/ok/kinds, seen delta, dead
-    # letters, metrics, leftover) then derives from the small staged
-    # parquet instead of re-scanning gigabytes of blobs.
-    t_fl = time.time()
-    # the iteration's bookkeeping scalars (fetched/ok/kinds-present) ride
-    # the fetch_log staging action itself as an Observation — previously
-    # a separate agg job over the staged parquet, i.e. one more serial
-    # driver barrier in every iteration's critical path
-    flog_obs = Observation(f"flog_{it}")
-    io.stage(
-        fetch_log_projection(fetched, it).observe(
-            flog_obs,
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("status") == 200, 1)).alias("n_ok"),
-            # per-kind-group row counts ride the same observation so
-            # throughput consumers (bench children, scale runs) can sum
-            # pages/blobs from committed manifests with ZERO read-back
-            # jobs over the fetch_log
-            F.count(
-                F.when(F.col("page_kind").isin(*P.MEDIA_KINDS), 1)
-            ).alias("n_media"),
-            F.count(
-                F.when(F.col("page_kind") == "image_blob", 1)
-            ).alias("n_image_blob"),
-            F.collect_set(
-                F.when(F.col("status") == 200, F.col("page_kind"))
-            ).alias("kinds"),
-        ),
-        "fetch_log",
-        it,
-    )
-    stats = flog_obs.get
-    fetch_log_s = round(time.time() - t_fl, 2)
-    t_fetch = round(time.time() - t0, 2)
+    # is staged FIRST, on its own, and in the SAME job that executes the
+    # fetch and materializes the cache: the write scans `fetched` through
+    # the persist, so one job pays fetch + cache fill + the body-free
+    # projection. The eager materialization matters because the staging
+    # stages below run ~10 concurrent jobs that all consume this cache —
+    # launched cold, they convoy on the per-partition cache locks while
+    # the first computes. The iteration's bookkeeping scalars
+    # (fetched/ok/kinds-present, per-kind-group row counts for
+    # throughput consumers) ride the same write as an Observation, and
+    # every later count (seen delta, dead letters, metrics, leftover)
+    # derives from the small staged parquet instead of re-scanning
+    # gigabytes of blobs.
+    def _fetch_log():
+        obs = Observation(f"flog_{it}")
+        io.stage(
+            fetch_log_projection(fetched, it).observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.count(F.when(F.col("status") == 200, 1)).alias("n_ok"),
+                F.count(F.when(F.col("page_kind").isin(*P.MEDIA_KINDS), 1)).alias("n_media"),
+                F.count(F.when(F.col("page_kind") == "image_blob", 1)).alias("n_image_blob"),
+                F.collect_set(F.when(F.col("status") == 200, F.col("page_kind"))).alias("kinds"),
+            ),
+            "fetch_log",
+            it,
+        )
+        return obs.get
+
+    flog_res, spans = _run_stages(spark.sparkContext, it, t0, [("fetch_log", _fetch_log, ())])
+    stats = flog_res["fetch_log"]
     # fetched_at: iteration-derived synthetic timestamp (constant literal,
     # no per-row cost) — the ratings parser emits it as the reference's
     # re-crawlable time_stamp column (spiders.py:5037)
@@ -253,7 +290,6 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
     )
 
     flog = spark.read.parquet(io._tdir("fetch_log", it))
-    n_fetched, n_ok = stats["n"], stats["n_ok"]
     kinds_present = set(stats["kinds"])
     attempted = flog.filter(~F.col("budget_denied"))
 
@@ -264,7 +300,7 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
     # 4 tasks/core for fetch-wave packing, but a PYTHON consumer at that
     # granularity pays 4x the worker round-trips for the same rows
     # (measured: the discovery count stage grew 8.3 -> 19.4 core-s from
-    # local[2] to local[8] on identical input, timeline_profile). One
+    # local[2] to local[8] on identical input, event-log profile). One
     # task per core keeps every core busy for exactly one wave.
     # media-only waves (the crawl's final blob fan-ins) discover NOTHING:
     # blobs are leaves of the crawl graph, so the Python discovery pass,
@@ -289,14 +325,11 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
         # broadcast subplan (with a Python robots-fetch stage) inside SEVERAL
         # staging jobs — broadcast exchanges are not reused across jobs, so
         # an unmaterialized cache would re-run that subplan per consumer.
-        # Its count doubles as the eager materialization of discovered_all:
-        # update_robots_cache's host-distinct scans every discovered
-        # partition through the persist, so the separate discovered count
-        # job (one more sequential barrier per iteration) is not needed.
-        # The count itself runs INSIDE the staging pool (``_discover`` below)
-        # so it overlaps with the flog-derived staging jobs instead of being
-        # a serial barrier between fetch and staging; only the three robots-
-        # dependent stages (frontier, robots, robots_denied) wait on it.
+        # Its count (the ``discover`` stage) doubles as the eager
+        # materialization of discovered_all: update_robots_cache's
+        # host-distinct scans every discovered partition through the
+        # persist. It overlaps with the flog-derived stages; only the
+        # robots-dependent stages (frontier, robots_tables) wait on it.
         robots_prev = io.read_snapshot("robots", upto=it - 1)
         robots_cache = ROB.update_robots_cache(
             robots_prev, discovered_all.select("host"), cfg.site
@@ -308,13 +341,13 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
         _empty_frontier = spark.createDataFrame([], FR.FRONTIER_SCHEMA)
         discovered, robots_denied = _empty_frontier, _empty_frontier
 
-    disc_info: dict = {}
-
     def _discover():
-        if not html_present:
+        if html_present:
+            n_rob = robots_cache.count()
+        else:
             # carry the previous host count through the media-only wave; a
             # manifest written before this key existed would otherwise pass
-            # 0 along and make the next HTML wave's stage_robots comparison
+            # 0 along and make the next HTML wave's restage comparison
             # spuriously true — fall back to counting the last committed
             # robots snapshot (a per-host table: tiny, one cheap job, and
             # only on the resume-from-old-manifest path)
@@ -322,18 +355,13 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
             if n_rob is None:
                 rb = io.read_snapshot("robots", upto=it - 1)
                 n_rob = rb.count() if rb is not None else 0
-            disc_info.update(n_robots=n_rob, stage_robots=False, discover_s=0.0)
-            return
-        t = time.time()
-        disc_info["n_robots"] = robots_cache.count()
         # re-stage the robots cache only when a fetch for a NEW host
         # happened (host count grew). After the first few waves the host
         # set is fixed, and skipping the write drops one Spark job per
         # iteration; readers fall back to the last committed robots
         # snapshot because the commit manifest below lists only tables
         # actually staged this iteration.
-        disc_info["stage_robots"] = disc_info["n_robots"] != prev.get("n_robots")
-        disc_info["discover_s"] = round(time.time() - t, 2)
+        return {"n_robots": n_rob, "restage": html_present and n_rob != prev.get("n_robots")}
 
     # --- seen filter: committed seen + this iteration's attempts + pending
     # (exactly-once enqueue, T7). seen_delta/dead/metrics/leftover all
@@ -358,42 +386,25 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
 
     # --- results ---
     # kind-aware staging for the blob-carrying tables: an extract whose
-    # source kind is absent this iteration is replaced by a STATICALLY
-    # empty DataFrame — its parquet write is a trivial job that never
-    # touches the fat fetched cache or spawns Python workers. The kind
-    # set derives from the committed fetch_log, so resume replays the
-    # same choices (kinds_present came from the staged fetch_log's agg
-    # above); the staged bytes are identical either way. (The 14 THIN
-    # text tables no longer go through this at all — one fused
-    # single-pass job stages them together, see plans/fused_staging.py.)
-    empties: set[str] = set()
-
-    def _maybe(df: DataFrame, table: str, *source_kinds: str) -> DataFrame:
-        if kinds_present.intersection(source_kinds):
-            return df
-        empties.add(table)
-        return spark.createDataFrame([], df.schema)
-
-    def _stage(df: DataFrame, table: str) -> None:
-        # statically-empty deltas are written by pyarrow directly —
-        # zero Spark jobs (stage_empty docstring has the numbers)
-        if table in empties:
-            io.stage_empty(df.schema, table, it)
-        else:
+    # source kind is absent this iteration is statically empty, so its
+    # delta is a schema shard written by pyarrow (stage_empty) — no Spark
+    # job, no touch of the fat fetched cache. The kind set derives from
+    # the staged fetch_log, so resume replays the same choices; the
+    # staged bytes are identical either way. (The 14 THIN text tables
+    # stage together in one fused single-pass job, plans/fused_staging.py.)
+    def _stage_if(kind: str, df: DataFrame, table: str) -> None:
+        if kind in kinds_present:
             io.stage(df, table, it)
+        else:
+            io.stage_empty(df.schema, table, it)
 
-    video_files = _maybe(P.extract_video_files(ok).withColumn("iteration", F.lit(it)), "video_files", "video_blob")
+    video_files = P.extract_video_files(ok).withColumn("iteration", F.lit(it))
     # ori bytes live ONLY in the images table; renditions stores the
     # small/large payloads. Writing ori into both (as before) doubled the
     # heaviest write of a media iteration; renditions_view() reunites
     # them for readers that want all three renditions.
     renditions_all = P.decode_blobs(ok)
-    renditions = _maybe(
-        renditions_all.filter(F.col("rendition") != "ori").withColumn(
-            "iteration", F.lit(it)
-        ),
-        "renditions", "image_blob",
-    )
+    renditions = renditions_all.filter(F.col("rendition") != "ori").withColumn("iteration", F.lit(it))
     has_blobs = "image_blob" in kinds_present
 
     metrics = (
@@ -414,41 +425,32 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
         F.concat(F.lit("http_"), F.col("status")).alias("last_error"),
     )
 
-    # --- stage everything, then the atomic commit ---
-    # The 14 thin text tables stage through ONE fused single-pass job
-    # (plans/fused_staging.py) — parse + write per table shard inside a
-    # single scan of the fetched cache, no per-table Spark job. The
-    # remaining staging jobs (frontier/seen/metrics/dead_letter/robots
-    # bookkeeping off the body-free fetch_log, plus the blob-fat
-    # renditions/images/video_files writes) are independent Spark jobs;
-    # submit them concurrently so the per-job scheduling overhead
-    # overlaps (driver-side concurrency only). `images` depends on the
-    # fused job: its caption join reads the staged captions delta so the
-    # body cache is scanned exactly once for all thin parses.
-    from concurrent.futures import ThreadPoolExecutor
-
-    post_counts: dict[str, int] = {}
-
     # on compaction iterations captions is staged as the FULL union
-    # (superseding all earlier delta dirs at read time), via a normal
-    # Spark write — the fused pass skips it then
-    fused_exclude = frozenset({"captions"}) if do_compact else frozenset()
-    caps_all = io.read_log("captions", upto=it - 1)
+    # (superseding all earlier delta dirs at read time) via a normal
+    # Spark write — the fused pass skips it then — and the images caption
+    # join reads that same union
+    if do_compact:
+        captions_plan = P.extract_captions(ok).withColumn("iteration", F.lit(it))
+        caps_prev = io.read_log("captions", upto=it - 1)
+        caps_base = captions_plan if caps_prev is None else caps_prev.unionByName(captions_plan)
 
-    def _stage_fused():
-        post_counts["thin"] = fused_stage(
-            ok, io, it, exclude=fused_exclude, kinds_present=kinds_present,
-            parallelism=dp,
-        )
-
-    def _stage_images():
-        # the caption join below reads the staged captions delta, so on
-        # non-compaction iterations wait for the fused pass to land it
-        if not do_compact:
-            fused_future.result()
+    def _images(*_fused) -> int:
         # flagship images table (input_hint shape): ori rendition +
         # caption. Captions parse one depth earlier, so by blob-fetch time
         # the caption is committed (or in this very iteration's delta).
+        ori = renditions_all.filter(F.col("rendition") == "ori")
+
+        def project(df: DataFrame) -> DataFrame:
+            return df.select(
+                F.col("rm").alias("image_id"), "bytes", "w", "h", "fmt", "caption", "phash",
+                F.lit(it).alias("iteration"),
+            )
+
+        if not has_blobs:
+            # no image fetches this iteration: no caption read, no cache
+            # scan, no Spark job — just the schema shard
+            io.stage_empty(project(ori.withColumn("caption", F.lit(None).cast("string"))).schema, "images", it)
+            return 0
         # The caption side is BROADCAST explicitly: its plan ends in a
         # Python UDF (no stats), so Catalyst would otherwise pick a
         # sort-merge join and shuffle the fat binary side — measured as a
@@ -459,148 +461,115 @@ def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -
         # fetch_log) via a broadcast semi-join — the caption log itself
         # streams map-side, never shuffles, and the broadcast payload is
         # per-iteration-sized instead of growing with the whole crawl.
+        if do_compact:
+            caps = caps_base
+        else:
+            # this iteration's captions delta, as the fused pass staged it
+            caps = spark.read.parquet(io._tdir("captions", it))
+            committed = io.read_log("captions", upto=it - 1)
+            caps = caps if committed is None else committed.unionByName(caps)
         rm_this_it = flog.filter(F.col("page_kind") == "image_blob").select("rm").distinct()
-        # this-iteration caption delta: the staged parquet (fused pass,
-        # body-free re-read) normally; the Spark parse plan on compaction
-        # iterations (where the fused pass skipped captions)
-        caps_delta = (
-            captions_plan if do_compact
-            else spark.read.parquet(io._tdir("captions", it))
-        )
-        caps_all_u = caps_delta if caps_all is None else caps_all.unionByName(caps_delta)
-        caps_needed = caps_all_u.select("rm", "caption").join(
-            F.broadcast(rm_this_it), "rm", "left_semi"
-        )
-        images = (
-            renditions_all.filter(F.col("rendition") == "ori")
-            .join(F.broadcast(caps_needed), "rm", "left")
-            .select(
-                F.col("rm").alias("image_id"), "bytes", "w", "h", "fmt",
-                F.col("caption"), "phash",
-            )
-            .withColumn("iteration", F.lit(it))
-        )
-        if not has_blobs:
-            # no image fetches this iteration: skip the cache scan, the
-            # broadcast caption join, AND the Spark write + footer count
-            io.stage_empty(images.schema, "images", it)
-            post_counts["images"] = 0
-            return
+        caps_needed = caps.select("rm", "caption").join(F.broadcast(rm_this_it), "rm", "left_semi")
+        images = project(ori.join(F.broadcast(caps_needed), "rm", "left"))
         # count rides the staging write as an Observation — no read-back job
         img_obs = Observation(f"images_{it}")
         io.stage(images.observe(img_obs, F.count(F.lit(1)).alias("n")), "images", it)
-        post_counts["images"] = img_obs.get["n"]
+        return img_obs.get["n"]
 
-    def _stage_frontier():
-        # next_pending's new_rows branch reads the robots-filtered
-        # discoveries — wait for their materialization (pool task below)
-        discover_future.result()
+    def _frontier(_discovered) -> dict:
         # counts ride the staging write as an Observation (no read-back
         # job); the per-kind split feeds the next iteration's
         # skip-the-dequeue-window proof above
-        fr_obs = Observation(f"frontier_{it}")
+        obs = Observation(f"frontier_{it}")
         is_media = F.col("page_kind").isin(*P.MEDIA_KINDS)
         io.stage(
             next_pending.observe(
-                fr_obs,
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.when(~is_media, 1)).alias("n_html"),
+                obs, F.count(F.lit(1)).alias("n"), F.count(F.when(~is_media, 1)).alias("n_html"),
             ),
             "frontier",
             it,
         )
-        vals = fr_obs.get
-        post_counts["pending_next"] = vals["n"]
-        post_counts["pending_next_html"] = vals["n_html"]
+        return obs.get
 
-    def _stage_robots_tables():
-        discover_future.result()
-        if disc_info["stage_robots"]:
+    def _robots_tables(disc) -> None:
+        if disc["restage"]:
             io.stage(robots_cache, "robots", it)
-        denied_delta = robots_denied.select(
-            "canon_url", "host", "page_kind"
-        ).withColumn("iteration", F.lit(it))
+        denied_delta = robots_denied.select("canon_url", "host", "page_kind").withColumn("iteration", F.lit(it))
         if html_present:
             io.stage(denied_delta, "robots_denied", it)
         else:
             # statically empty on a media-only wave: schema shard, no job
             io.stage_empty(denied_delta.schema, "robots_denied", it)
 
-    if do_compact:
-        # captions full-union base: committed log + this iteration's
-        # parse (the fused pass skips captions on compaction iterations)
-        captions_plan = P.extract_captions(ok).withColumn("iteration", F.lit(it))
-        caps_base = (
-            captions_plan if caps_all is None
-            else caps_all.unionByName(captions_plan)
-        )
-
-    jobs = [
-        ("frontier", _stage_frontier),
-        # on compaction iterations the full union is staged as a base
-        # (superseding all earlier delta dirs at read time)
-        ("seen", lambda: io.stage(all_seen if do_compact else seen_delta, "seen", it)),
-        *([("captions", lambda: io.stage(caps_base, "captions", it))] if do_compact else []),
-        ("video_files", lambda: _stage(video_files, "video_files")),
-        # independent of the caption-join chain: decode already happened
-        # in the fetch pass, so renditions is a pure projection of the
-        # hot cache — staging it CONCURRENTLY with images shortens a
-        # media iteration's critical path from fused+renditions+images
-        # to max(renditions, fused+images)
-        ("renditions", lambda: _stage(renditions, "renditions")),
-        ("dead_letter", lambda: io.stage(
-            dead.withColumn("iteration", F.lit(it)), "dead_letter", it)),
-        ("metrics", lambda: io.stage(metrics, "metrics", it)),
-        ("robots_tables", _stage_robots_tables),
-        ("images", _stage_images),
+    # --- stage everything, then the atomic commit ---
+    # The 14 thin text tables stage through ONE fused single-pass job
+    # (plans/fused_staging.py); the rest are independent Spark jobs run
+    # concurrently so their per-job scheduling overhead overlaps
+    # (driver-side concurrency only). The fused pass is declared first:
+    # it is the one full scan of the fat body cache, and on iterations
+    # with image blobs the images caption join reads the captions delta
+    # it stages. discover comes next: frontier and robots_tables need the
+    # materialized robots cache, while the flog-derived stages overlap.
+    # Stage outputs are invisible until the manifest commit, so the
+    # schedule cannot change what is committed.
+    stages = [
+        ("thin_fused", lambda: fused_stage(
+            ok, io, it, exclude=frozenset({"captions"}) if do_compact else frozenset(),
+            kinds_present=kinds_present, parallelism=dp), ()),
+        ("discover", _discover, ()),
+        ("frontier", _frontier, ("discover",)),
+        ("seen", lambda: io.stage(all_seen if do_compact else seen_delta, "seen", it), ()),
+        *([("captions", lambda: io.stage(caps_base, "captions", it), ())] if do_compact else []),
+        ("video_files", lambda: _stage_if("video_blob", video_files, "video_files"), ()),
+        # renditions is a pure projection of the hot cache (decode
+        # happened in the fetch pass), so it runs concurrently with the
+        # images chain: a media iteration's critical path is
+        # max(renditions, fused+images), not their sum
+        ("renditions", lambda: _stage_if("image_blob", renditions, "renditions"), ()),
+        ("dead_letter", lambda: io.stage(dead.withColumn("iteration", F.lit(it)), "dead_letter", it), ()),
+        ("metrics", lambda: io.stage(metrics, "metrics", it), ()),
+        ("robots_tables", _robots_tables, ("discover",)),
+        ("images", _images, ("thin_fused",) if has_blobs and not do_compact else ()),
     ]
-    stage_s: dict[str, float] = {"fetch_log": fetch_log_s}
-
-    def _timed(name, fn):
-        t = time.time()
-        fn()
-        stage_s[name] = round(time.time() - t, 2)
-
-    with ThreadPoolExecutor(max_workers=len(jobs) + 2) as pool:
-        # the fused pass goes in FIRST: it is the one full scan of the
-        # fat body cache, and the images job blocks on it (caption join).
-        # discover goes in next: frontier/robots_tables block on it, while
-        # the flog-derived stages (seen/metrics/dead_letter/...) overlap.
-        fused_future = pool.submit(_timed, "thin_fused", _stage_fused)
-        discover_future = pool.submit(_discover)
-        futures = [pool.submit(_timed, name, fn) for name, fn in jobs]
-        for f in [fused_future, discover_future, *futures]:
-            f.result()  # propagate failures before commit
+    res, stage_spans = _run_stages(spark.sparkContext, it, t0, stages)
+    spans.update(stage_spans)
 
     fetched.unpersist()
     if discovered_all is not None:
         discovered_all.unpersist()
     if robots_cache is not None:
         robots_cache.unpersist()
-    n_pending_next = post_counts["pending_next"]
-    n_images = post_counts["images"]
+    n_fetched = stats["n"]
+    fr = res["frontier"]
     summary = {
         "fetched": n_fetched,
-        "ok": n_ok,
+        "ok": stats["n_ok"],
         "fetched_media": int(stats["n_media"]),
         "fetched_image_blobs": int(stats["n_image_blob"]),
-        "pending_next": n_pending_next,
-        "pending_next_html": post_counts["pending_next_html"],
-        "pending_next_media": n_pending_next - post_counts["pending_next_html"],
-        "images": n_images,
+        "pending_next": fr["n"],
+        "pending_next_html": fr["n_html"],
+        "pending_next_media": fr["n"] - fr["n_html"],
+        "images": res["images"],
         "seen_total": prev.get("seen_total", 0) + n_fetched,
-        "n_robots": disc_info["n_robots"],
+        "n_robots": res["discover"]["n_robots"],
         "wall_s": round(time.time() - t0, 3),
-        "fetch_s": t_fetch,
-        "discover_s": disc_info["discover_s"],
-        "stage_s": stage_s,
-        "staged_rows": post_counts.get("thin", {}),
+        "staged_rows": res["thin_fused"],
+        # per-stage [start_s, end_s] from the iteration start
+        "stages": spans,
+        # the adaptive physical choices taken (each derived from committed
+        # state only, so a resume replays them)
+        "decisions": {
+            "dequeue_window": "skipped" if skip_window else "run",
+            "n_salts": n_salts,
+            "compact": do_compact,
+            "robots_restaged": res["discover"]["restage"],
+        },
     }
     extra = {"summary": summary}
     if do_compact:
         extra["bases"] = {"seen": it, "captions": it}
     committed_tables = [
-        t for t in RESULT_TABLES if t != "robots" or disc_info["stage_robots"]
+        t for t in RESULT_TABLES if t != "robots" or res["discover"]["restage"]
     ]
     io.commit(it, committed_tables, extra=extra)
     return summary
@@ -627,21 +596,17 @@ def run_crawl(
     # shuffle stage across the ~10 bookkeeping jobs of every iteration
     # (measured: identical back-to-back 8-core bench legs, 319.9 s with
     # AQE vs 235.8 s without; the gap widens under driver load, so AQE
-    # is also the largest run-to-run variance source). Overridable for
-    # cluster deployments where a data-dependent frontier join shape
-    # might warrant it.
+    # is also the largest run-to-run variance source).
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     summaries = []
     # the try covers the conf flip AND the first-run init path, so an
     # exception anywhere (init_frontier included) still restores the
-    # caller's AQE setting in the finally
+    # caller's AQE setting and clears the job label in the finally
     try:
-        spark.conf.set(
-            "spark.sql.adaptive.enabled",
-            os.environ.get("SPARK_GRAFT_CRAWL_AQE", "false"),
-        )
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
         last = io.last_committed()
         if last is None:
+            spark.sparkContext.setLocalProperty(_DESC, "it=-1/init")
             seeds = init_frontier(spark, seed_ids, cfg)
             robots0 = ROB.fetch_robots_for_hosts(seeds.select("host"), cfg.site)
             allowed, denied = ROB.split_by_robots(seeds, robots0)
@@ -657,10 +622,13 @@ def run_crawl(
                 if isinstance(seed_ids, DataFrame)
                 else len(set(seed_ids))
             )
+            spark.sparkContext.setLocalProperty(_DESC, None)
+            init_s = round(time.time() - t0, 3)
             io.commit(
                 -1,
                 ["frontier", "robots", "robots_denied"],
-                extra={"summary": {"init_seeds": n_seeds}},
+                extra={"summary": {"init_seeds": n_seeds, "stages": {"init": [0.0, init_s]},
+                                   "decisions": {}}},
             )
             last = -1
         for it in range(last + 1, cfg.max_iterations):
@@ -671,6 +639,7 @@ def run_crawl(
             if s["pending_next"] == 0:
                 break
     finally:
+        spark.sparkContext.setLocalProperty(_DESC, None)
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return {"iterations": summaries, "total_wall_s": round(time.time() - t0, 3)}
 

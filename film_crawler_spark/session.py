@@ -52,7 +52,7 @@ def engine_conf(shuffle_partitions: int | str = "32") -> dict[str, str]:
     conf["spark.python.daemon.module"] = "film_crawler_spark.daemon_warm"
     conf.update({
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_AQE", "true"),
+        "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
@@ -70,10 +70,11 @@ def engine_conf(shuffle_partitions: int | str = "32") -> dict[str, str]:
         "spark.sql.inMemoryColumnarStorage.batchSize": "1024",
         "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
     })
-    # opt-in event logging for offline stage profiling
-    # (tools/stage_profile.py): SPARK_GRAFT_EVENTLOG=<dir> — this is how
-    # the round-1/2 perf bugs (cache convoys, UDF recompute, BLAS
-    # oversubscription) were pinpointed.
+    # opt-in event logging for offline profiling: SPARK_GRAFT_EVENTLOG=<dir>,
+    # then tools/stage_profile.py reports executor time per crawl stage
+    # (jobs carry it=<i>/<stage> descriptions), the top Spark stages and
+    # the idle-core windows — how the round-1/2 perf bugs (cache convoys,
+    # UDF recompute, BLAS oversubscription) were pinpointed.
     ev_dir = os.environ.get("SPARK_GRAFT_EVENTLOG")
     if ev_dir:
         ev_dir = os.path.abspath(ev_dir)

@@ -193,6 +193,15 @@ def test_metrics_lineage_present(crawled):
     m = crawled.read_log("metrics")
     assert {"iteration", "partition_id", "host", "kind", "status", "pages", "bytes"} <= set(m.columns)
     assert m.count() > 0
+    # every commit carries its iteration trace: per-stage [start_s, end_s]
+    # and the adaptive choices taken
+    for i in crawled.committed_iterations():
+        s = crawled.manifest(i)["summary"]
+        assert s["stages"] and all(0 <= a <= b for a, b in s["stages"].values()), i
+        assert "decisions" in s, i
+        if i >= 0:
+            assert {"fetch_log", "thin_fused", "discover", "frontier", "images"} <= set(s["stages"]), i
+            assert set(s["decisions"]) == {"dequeue_window", "n_salts", "compact", "robots_restaged"}, i
 
 
 def test_videos_match_ground_truth(crawled, sim):
