@@ -206,10 +206,10 @@ def fetch_log_projection(fetched: DataFrame, it: int) -> DataFrame:
     Single definition shared by the crawl loop and the supplement job —
     both stage fetch_log deltas into the same log table, and read_log
     unions their parquet, so the two writers must never drift."""
-    from film_crawler_spark.operators.frontier import FRONTIER_SCHEMA
+    from film_crawler_spark.operators.frontier import FRONTIER_COLS
 
     return fetched.select(
-        *[f.name for f in FRONTIER_SCHEMA.fields],
+        *FRONTIER_COLS,
         "status", "n_attempts", "budget_denied",
         F.spark_partition_id().alias("partition_id"),
         F.length("body").alias("body_len"),

@@ -5,8 +5,13 @@ fixed-size epochs (reference spiders.py:208-277: epoch = THREADS*2 URLs,
 slice at 270-271, order = sorted seeds optionally reversed at 93,
 172-173). The engine makes it an explicit table:
 
-    (url, canon_url, url_hash, shard, host, priority, seq,
-     depth, page_kind, tt, rm, attempts, discovered_at_iter)
+    FRONTIER_SCHEMA: (url, canon_url, url_hash, shard, host, priority,
+    seq, depth, page_kind, tt, rm, nm, vi, ev, co, attempts,
+    discovered_at_iter)
+
+Every frontier row of a seed list, a probe or a generator fetch is
+built by ``frontier_rows``; the crawl loop derives the same columns for
+discovered links.
 
 Ordering contract (the "exact frontier ordering per host" gate):
 within a host, URLs are dequeued in ascending (priority, seq) order.
@@ -38,6 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from film_crawler_spark.functions.urls import canonicalize_url, shard_col
 from film_crawler_spark.sources.synthetic_site import MEDIA_KINDS
 
 FRONTIER_SCHEMA = T.StructType(
@@ -61,10 +67,39 @@ FRONTIER_SCHEMA = T.StructType(
         T.StructField("discovered_at_iter", T.IntegerType()),
     ]
 )
+FRONTIER_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
 
 
 def seed_seq(rank: int) -> str:
     return f"{rank:012d}"
+
+
+def frontier_rows(df: DataFrame) -> DataFrame:
+    """THE frontier-row builder: FRONTIER_SCHEMA rows, in schema order,
+    from ``url``, ``page_kind``, ``seq`` (the row's integer rank, written
+    as ``seed_seq``) and whichever entity-id columns (tt, rm, nm, vi, ev,
+    co) ``df`` has. canon_url, url_hash, shard and host derive from the
+    url; every other column is 0 or null. Each caller keeps its own rank
+    policy (global seed rank, monotonic id, list position)."""
+
+    @F.pandas_udf("string")
+    def canon(urls):
+        return urls.map(canonicalize_url)
+
+    @F.pandas_udf("string")
+    def seq_key(ranks):
+        return ranks.map(seed_seq)
+
+    rows = df.withColumns({"canon_url": canon("url"), "seq": seq_key("seq")}).withColumns({
+        "url_hash": F.xxhash64("canon_url"),
+        "shard": shard_col(F.col("canon_url")),
+        "host": F.regexp_extract("url", r"https://([^/]+)/", 1),
+    })
+    return rows.select(*[
+        F.col(f.name) if f.name in rows.columns
+        else F.lit(None if isinstance(f.dataType, T.StringType) else 0).cast(f.dataType).alias(f.name)
+        for f in FRONTIER_SCHEMA.fields
+    ])
 
 
 def distributed_rank(

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from film_crawler_spark.functions.urls import canonicalize_url, n_pages, ori_url, url_host
-from film_crawler_spark.operators.frontier import child_seq
+from film_crawler_spark.operators.frontier import FRONTIER_SCHEMA, child_seq
 from film_crawler_spark.sources.synthetic_site import (
     MEDIA_KINDS, PER_PAGE, PER_PAGE_CO, PER_PAGE_HIST, PER_PAGE_VIDEO,
     PSECTIONS, SECTIONS,
@@ -33,23 +33,10 @@ from film_crawler_spark.sources.synthetic_site import (
 
 # frontier columns the parse UDF emits; url_hash/shard are added JVM-side
 # afterwards (xxhash64/murmur3 must come from Spark so they are the same
-# bits everywhere).
+# bits everywhere), attempts/discovered_at_iter by the crawl loop.
 DISCOVERED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("canon_url", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("priority", T.IntegerType()),
-        T.StructField("seq", T.StringType()),
-        T.StructField("depth", T.IntegerType()),
-        T.StructField("page_kind", T.StringType()),
-        T.StructField("tt", T.StringType()),
-        T.StructField("rm", T.StringType()),
-        T.StructField("nm", T.StringType()),
-        T.StructField("vi", T.StringType()),
-        T.StructField("ev", T.StringType()),
-        T.StructField("co", T.StringType()),
-    ]
+    [f for f in FRONTIER_SCHEMA.fields
+     if f.name not in ("url_hash", "shard", "attempts", "discovered_at_iter")]
 )
 
 TITLE_SCHEMA = T.StructType(
@@ -82,20 +69,6 @@ SECTION_SCHEMA = T.StructType(
     ]
 )
 
-RENDITION_SCHEMA = T.StructType(
-    [
-        T.StructField("rm", T.StringType()),
-        T.StructField("tt", T.StringType()),
-        T.StructField("nm", T.StringType()),
-        T.StructField("rendition", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("fmt", T.StringType()),
-        T.StructField("phash", T.LongType()),
-    ]
-)
-
 # counts appear under BOTH layouts (P6): layout A class selectors, layout
 # B data-testid (reference's try/except becomes a regex alternation here;
 # the HERO parse below keeps the explicit two-step dispatch)
@@ -117,7 +90,6 @@ _RE_CO_COUNT = re.compile(r"of ([\d,]+) titles")
 _RE_GRID = re.compile(r'href="(/(?:title|name)/((?:tt|nm)\d+)/mediaviewer/(rm\d+))"')
 _RE_CAPTION = re.compile(r'class="caption">(.*?)</div>')
 _RE_SIZED = re.compile(r'data-size="(small|large)" src="([^"]+)"')
-_RE_SIZE_SPEC = re.compile(r"\.(UX32_CR0|UX96_CR0)\.")
 _RE_PERSON_LINK = re.compile(r'data-link="(https://[^"]+/name/(nm\d+)/)"')
 _RE_CREDITS = re.compile(r'class="credit-count">([\d,]+) credits')
 _RE_PERSON_HERO = re.compile(

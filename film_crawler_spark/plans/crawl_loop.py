@@ -22,11 +22,15 @@ Each iteration stages fetch_log first, then runs its staging work as a
 declared list of ``(name, fn, after)`` stages (``_run_stages``): every
 stage gets its own thread and waits only for the stages in its
 ``after``. Every Spark job carries the description ``it=<i>/<stage>``
-(``plan`` for the driver-thread reads between stages, ``it=-1/init``
-for the seed frontier), so an event log maps executor time to crawl
-stages (tools/stage_profile.py). The commit manifest's summary records
-the iteration's trace: ``stages`` ({name: [start_s, end_s]} from the
-iteration start) and ``decisions`` (the adaptive choices taken).
+(``plan`` for the driver-thread reads between stages), so an event log
+maps executor time to crawl stages (tools/stage_profile.py). The commit
+manifest's summary records the iteration's trace: ``stages`` ({name:
+[start_s, end_s]} from the iteration start) and ``decisions`` (the
+adaptive choices taken).
+
+The seed commit (iteration -1) runs the iteration's own admission
+stages (``_commit_seeds``), and supplement and repair commit through
+the same runner, so every job and manifest of a crawl is traced alike.
 
 Resume: ``run_crawl`` with the same warehouse continues after the last
 committed iteration — killed mid-iteration, the partial stage dirs are
@@ -38,12 +42,13 @@ from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from film_crawler_spark.functions.urls import canonicalize_url, shard_col
+from film_crawler_spark.functions.urls import shard_col
 from film_crawler_spark.operators import frontier as FR
 from film_crawler_spark.operators import parse as P
 from film_crawler_spark.operators import robots as ROB
@@ -97,9 +102,9 @@ def init_frontier(
     172-173 (reverse). ``seed_ids`` may be a list (tests, synthetic
     benches) or a DataFrame with a single ``id`` column (the scale path:
     a seed file read by Spark flows here without ever touching the
-    driver). The global rank is computed by ``distributed_rank`` —
-    range-partitioned sort + per-partition offsets, no single-task
-    window (round-1 verdict wrong-item 2).
+    driver). The global rank (the row's ``seq``) is computed by
+    ``distributed_rank`` — range-partitioned sort + per-partition
+    offsets, no single-task window (round-1 verdict wrong-item 2).
     """
     site = SyntheticSite(cfg.site)
     if isinstance(seed_ids, DataFrame):
@@ -107,50 +112,33 @@ def init_frontier(
     else:
         ids = spark.createDataFrame([(s,) for s in seed_ids], "id string").distinct()
     order = F.col("id").desc() if cfg.reverse_seeds else F.col("id").asc()
-    ranked = FR.distributed_rank(ids, [order], "rank")
+    ranked = FR.distributed_rank(ids, [order], "seq")
 
     @F.pandas_udf("string")
     def title_url(ids_s):
         return ids_s.map(site.title_url)
 
-    @F.pandas_udf("string")
-    def canon(urls_s):
-        return urls_s.map(canonicalize_url)
-
-    @F.pandas_udf("string")
-    def seqkey(rank_s):
-        return rank_s.map(FR.seed_seq)
-
-    df = (
-        ranked.withColumn("url", title_url("id"))
-        .withColumn("canon_url", canon("url"))
-        .select(
-            "url",
-            "canon_url",
-            F.xxhash64("canon_url").alias("url_hash"),
-            shard_col(F.col("canon_url")).alias("shard"),
-            F.regexp_extract("url", r"https://([^/]+)/", 1).alias("host"),
-            F.lit(0).alias("priority"),
-            seqkey("rank").alias("seq"),
-            F.lit(0).alias("depth"),
-            F.lit("title").alias("page_kind"),
-            F.col("id").alias("tt"),
-            F.lit(None).cast("string").alias("rm"),
-            F.lit(None).cast("string").alias("nm"),
-            F.lit(None).cast("string").alias("vi"),
-            F.lit(None).cast("string").alias("ev"),
-            F.lit(None).cast("string").alias("co"),
-            F.lit(0).alias("attempts"),
-            F.lit(0).alias("discovered_at_iter"),
-        )
+    return FR.frontier_rows(
+        ranked.select(title_url("id").alias("url"), F.lit("title").alias("page_kind"), "seq",
+                      F.col("id").alias("tt"))
     )
-    return df
 
 
 def _dedup_discovered(discovered: DataFrame) -> DataFrame:
     """Keep the first discovery of each canon_url by (priority, seq)."""
     w = Window.partitionBy("canon_url").orderBy("priority", "seq")
     return discovered.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+
+
+@contextmanager
+def _job_label(sc, label: str):
+    """Describe every Spark job this thread launches in the block as
+    ``label`` (``it=<i>/<stage>`` or ``it=<i>/plan``)."""
+    sc.setLocalProperty(_DESC, label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_DESC, None)
 
 
 def _run_stages(sc, it: int, t0: float, stages: list[tuple]) -> tuple[dict, dict]:
@@ -165,13 +153,12 @@ def _run_stages(sc, it: int, t0: float, stages: list[tuple]) -> tuple[dict, dict
 
     def run(name, fn, after):
         deps = [futures[d].result() for d in after]
-        sc.setLocalProperty(_DESC, f"it={it}/{name}")
         start = time.time()
         try:
-            return fn(*deps)
+            with _job_label(sc, f"it={it}/{name}"):
+                return fn(*deps)
         finally:
             spans[name] = [round(start - t0, 3), round(time.time() - t0, 3)]
-            sc.setLocalProperty(_DESC, None)
 
     with ThreadPoolExecutor(max_workers=len(stages)) as pool:
         for name, fn, after in stages:
@@ -181,15 +168,74 @@ def _run_stages(sc, it: int, t0: float, stages: list[tuple]) -> tuple[dict, dict
         return {name: f.result() for name, f in futures.items()}, spans
 
 
+# --- frontier admission: the seed commit and every iteration share it ---
+
+
+def _admit(io: TableIO, cfg: CrawlConfig, it: int, candidates: DataFrame):
+    """Grow the robots cache by the persisted ``candidates``' new hosts;
+    returns ``(cache, allowed, denied)``. The cache is persisted: it is a
+    broadcast subplan (with a Python robots-fetch stage) of several
+    staging jobs, and broadcast exchanges are not reused across jobs."""
+    cache = ROB.update_robots_cache(
+        io.read_snapshot("robots", upto=it - 1), candidates.select("host"), cfg.site
+    ).persist()
+    return (cache, *ROB.split_by_robots(candidates, cache))
+
+
+def _discover(io: TableIO, it: int, prev: dict, cache: DataFrame | None) -> dict:
+    """Count the grown robots cache (``None`` on a media-only wave). The
+    count also materializes the candidates: update_robots_cache's
+    host-distinct scans every candidate partition through their persist."""
+    if cache is not None:
+        n_rob = cache.count()
+    else:
+        # carry the previous host count through the media-only wave; a
+        # manifest without the key (written before it existed, or by a
+        # repair) falls back to counting the committed robots snapshot
+        n_rob = prev.get("n_robots")
+        if n_rob is None:
+            rb = io.read_snapshot("robots", upto=it - 1)
+            n_rob = rb.count() if rb is not None else 0
+    # re-stage the robots cache only when a fetch for a NEW host
+    # happened (host count grew). After the first few waves the host
+    # set is fixed, and skipping the write drops one Spark job per
+    # iteration; readers fall back to the last committed robots
+    # snapshot because the commit manifest lists only tables actually
+    # staged this iteration.
+    return {"n_robots": n_rob, "restage": cache is not None and n_rob != prev.get("n_robots")}
+
+
+def _stage_frontier(io: TableIO, it: int, df: DataFrame) -> dict:
+    """Stage the pending frontier; its counts ride the write as an
+    Observation and become the manifest's pending hints (the per-kind
+    split feeds the next iteration's skip-the-dequeue-window proof)."""
+    obs = Observation(f"frontier_{it}")
+    n_html = F.count(F.when(~F.col("page_kind").isin(*P.MEDIA_KINDS), 1)).alias("n_html")
+    io.stage(df.observe(obs, F.count(F.lit(1)).alias("n"), n_html), "frontier", it)
+    n, n_html = obs.get["n"], obs.get["n_html"]
+    return {"pending_next": n, "pending_next_html": n_html, "pending_next_media": n - n_html}
+
+
+def _stage_robots(io: TableIO, it: int, cache: DataFrame | None, denied: DataFrame, disc: dict) -> int:
+    """Stage the robots cache (if ``discover`` says it grew) and the
+    robots_denied delta; returns the number of denied candidates."""
+    if disc["restage"]:
+        io.stage(cache, "robots", it)
+    denied_delta = denied.select("canon_url", "host", "page_kind").withColumn("iteration", F.lit(it))
+    if cache is None:
+        # statically empty on a media-only wave: schema shard, no job
+        io.stage_empty(denied_delta.schema, "robots_denied", it)
+        return 0
+    obs = Observation(f"robots_denied_{it}")
+    io.stage(denied_delta.observe(obs, F.count(F.lit(1)).alias("n")), "robots_denied", it)
+    return obs.get["n"]
+
+
 def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> dict:
     """Execute iteration ``it`` and commit. Returns summary counts."""
-    sc = spark.sparkContext
     # driver-thread jobs (snapshot/log reads) between the stages
-    sc.setLocalProperty(_DESC, f"it={it}/plan")
-    try:
+    with _job_label(spark.sparkContext, f"it={it}/plan"):
         return _iteration(spark, io, cfg, it)
-    finally:
-        sc.setLocalProperty(_DESC, None)
 
 
 def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> dict:
@@ -203,7 +249,7 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # driver-side size hints from the previous commit's manifest (free —
     # no Spark job) drive the adaptive physical choices below
     prev = io.manifest(it - 1).get("summary", {}) if it - 1 in set(io.committed_iterations()) else {}
-    pending_hint = prev.get("pending_next", prev.get("init_seeds", 0))
+    pending_hint = prev.get("pending_next", 0)
 
     # --- dequeue: per-kind budgets (reference throttles pages, not media) ---
     # The per-(host, kind-group) top-B window is what ENFORCES the
@@ -218,8 +264,6 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     n_salts = cfg.n_salts if pending_hint >= cfg.salt_min_pending else 1
     hint_html = prev.get("pending_next_html")
     hint_media = prev.get("pending_next_media")
-    if hint_html is None and "init_seeds" in prev:
-        hint_html, hint_media = prev["init_seeds"], 0  # seeds are all pages
     skip_window = (
         hint_html is not None
         and hint_html <= pol.budget_html
@@ -264,10 +308,12 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # every later count (seen delta, dead letters, metrics, leftover)
     # derives from the small staged parquet instead of re-scanning
     # gigabytes of blobs.
+    flog_plan = fetch_log_projection(fetched, it)
+
     def _fetch_log():
         obs = Observation(f"flog_{it}")
         io.stage(
-            fetch_log_projection(fetched, it).observe(
+            flog_plan.observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
                 F.count(F.when(F.col("status") == 200, 1)).alias("n_ok"),
@@ -289,7 +335,8 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
         "fetched_at", F.lit(P.synthetic_fetch_time(it))
     )
 
-    flog = spark.read.parquet(io._tdir("fetch_log", it))
+    # read back with the writer's schema: no schema-inference job
+    flog = spark.read.schema(flog_plan.schema).parquet(io._tdir("fetch_log", it))
     kinds_present = set(stats["kinds"])
     attempted = flog.filter(~F.col("budget_denied"))
 
@@ -316,52 +363,15 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
             .withColumn("shard", shard_col(F.col("canon_url")))
             .withColumn("attempts", F.lit(0))
             .withColumn("discovered_at_iter", F.lit(it))
-            .select(*[f.name for f in FR.FRONTIER_SCHEMA.fields])
+            .select(*FR.FRONTIER_COLS)
             .persist()
         )
-
-        # --- robots filter: grow the per-host cache, drop disallowed URLs.
-        # The cache is persisted + materialized because it appears as a
-        # broadcast subplan (with a Python robots-fetch stage) inside SEVERAL
-        # staging jobs — broadcast exchanges are not reused across jobs, so
-        # an unmaterialized cache would re-run that subplan per consumer.
-        # Its count (the ``discover`` stage) doubles as the eager
-        # materialization of discovered_all: update_robots_cache's
-        # host-distinct scans every discovered partition through the
-        # persist. It overlaps with the flog-derived stages; only the
-        # robots-dependent stages (frontier, robots_tables) wait on it.
-        robots_prev = io.read_snapshot("robots", upto=it - 1)
-        robots_cache = ROB.update_robots_cache(
-            robots_prev, discovered_all.select("host"), cfg.site
-        ).persist()
-        discovered, robots_denied = ROB.split_by_robots(discovered_all, robots_cache)
+        # --- robots filter: only the robots-dependent stages (frontier,
+        # robots_tables) wait on its ``discover`` count
+        robots_cache, discovered, robots_denied = _admit(io, cfg, it, discovered_all)
     else:
-        discovered_all = None
-        robots_cache = None
-        _empty_frontier = spark.createDataFrame([], FR.FRONTIER_SCHEMA)
-        discovered, robots_denied = _empty_frontier, _empty_frontier
-
-    def _discover():
-        if html_present:
-            n_rob = robots_cache.count()
-        else:
-            # carry the previous host count through the media-only wave; a
-            # manifest written before this key existed would otherwise pass
-            # 0 along and make the next HTML wave's restage comparison
-            # spuriously true — fall back to counting the last committed
-            # robots snapshot (a per-host table: tiny, one cheap job, and
-            # only on the resume-from-old-manifest path)
-            n_rob = prev.get("n_robots")
-            if n_rob is None:
-                rb = io.read_snapshot("robots", upto=it - 1)
-                n_rob = rb.count() if rb is not None else 0
-        # re-stage the robots cache only when a fetch for a NEW host
-        # happened (host count grew). After the first few waves the host
-        # set is fixed, and skipping the write drops one Spark job per
-        # iteration; readers fall back to the last committed robots
-        # snapshot because the commit manifest below lists only tables
-        # actually staged this iteration.
-        return {"n_robots": n_rob, "restage": html_present and n_rob != prev.get("n_robots")}
+        discovered_all = robots_cache = None
+        discovered = robots_denied = spark.createDataFrame([], FR.FRONTIER_SCHEMA)
 
     # --- seen filter: committed seen + this iteration's attempts + pending
     # (exactly-once enqueue, T7). seen_delta/dead/metrics/leftover all
@@ -374,14 +384,13 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # periodic log compaction (see CrawlConfig.compact_every)
     do_compact = it > 0 and cfg.compact_every > 0 and it % cfg.compact_every == 0
     leftover = FR.remaining(pending, flog)
-    frontier_cols = [f.name for f in FR.FRONTIER_SCHEMA.fields]
     # one combined anti-join: a discovery is new iff it is in neither the
     # seen log (committed + this iteration's attempts) nor the leftover
     # pending rows
     exclusions = all_seen.select("canon_url").unionByName(leftover.select("canon_url"))
-    new_rows = discovered.join(exclusions, "canon_url", "left_anti").select(*frontier_cols)
+    new_rows = discovered.join(exclusions, "canon_url", "left_anti").select(*FR.FRONTIER_COLS)
 
-    denied_rows = flog.filter(F.col("budget_denied")).select(*frontier_cols)
+    denied_rows = flog.filter(F.col("budget_denied")).select(*FR.FRONTIER_COLS)
     next_pending = leftover.unionByName(denied_rows).unionByName(new_rows)
 
     # --- results ---
@@ -420,7 +429,7 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     )
 
     dead = attempted.filter(F.col("status") != 200).select(
-        *[c for c in frontier_cols if c != "attempts"],
+        *[c for c in FR.FRONTIER_COLS if c != "attempts"],
         F.col("n_attempts").alias("attempts"),
         F.concat(F.lit("http_"), F.col("status")).alias("last_error"),
     )
@@ -476,31 +485,6 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
         io.stage(images.observe(img_obs, F.count(F.lit(1)).alias("n")), "images", it)
         return img_obs.get["n"]
 
-    def _frontier(_discovered) -> dict:
-        # counts ride the staging write as an Observation (no read-back
-        # job); the per-kind split feeds the next iteration's
-        # skip-the-dequeue-window proof above
-        obs = Observation(f"frontier_{it}")
-        is_media = F.col("page_kind").isin(*P.MEDIA_KINDS)
-        io.stage(
-            next_pending.observe(
-                obs, F.count(F.lit(1)).alias("n"), F.count(F.when(~is_media, 1)).alias("n_html"),
-            ),
-            "frontier",
-            it,
-        )
-        return obs.get
-
-    def _robots_tables(disc) -> None:
-        if disc["restage"]:
-            io.stage(robots_cache, "robots", it)
-        denied_delta = robots_denied.select("canon_url", "host", "page_kind").withColumn("iteration", F.lit(it))
-        if html_present:
-            io.stage(denied_delta, "robots_denied", it)
-        else:
-            # statically empty on a media-only wave: schema shard, no job
-            io.stage_empty(denied_delta.schema, "robots_denied", it)
-
     # --- stage everything, then the atomic commit ---
     # The 14 thin text tables stage through ONE fused single-pass job
     # (plans/fused_staging.py); the rest are independent Spark jobs run
@@ -516,8 +500,8 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
         ("thin_fused", lambda: fused_stage(
             ok, io, it, exclude=frozenset({"captions"}) if do_compact else frozenset(),
             kinds_present=kinds_present, parallelism=dp), ()),
-        ("discover", _discover, ()),
-        ("frontier", _frontier, ("discover",)),
+        ("discover", lambda: _discover(io, it, prev, robots_cache), ()),
+        ("frontier", lambda _disc: _stage_frontier(io, it, next_pending), ("discover",)),
         ("seen", lambda: io.stage(all_seen if do_compact else seen_delta, "seen", it), ()),
         *([("captions", lambda: io.stage(caps_base, "captions", it), ())] if do_compact else []),
         ("video_files", lambda: _stage_if("video_blob", video_files, "video_files"), ()),
@@ -528,7 +512,8 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
         ("renditions", lambda: _stage_if("image_blob", renditions, "renditions"), ()),
         ("dead_letter", lambda: io.stage(dead.withColumn("iteration", F.lit(it)), "dead_letter", it), ()),
         ("metrics", lambda: io.stage(metrics, "metrics", it), ()),
-        ("robots_tables", _robots_tables, ("discover",)),
+        ("robots_tables", lambda disc: _stage_robots(io, it, robots_cache, robots_denied, disc),
+         ("discover",)),
         ("images", _images, ("thin_fused",) if has_blobs and not do_compact else ()),
     ]
     res, stage_spans = _run_stages(spark.sparkContext, it, t0, stages)
@@ -540,15 +525,12 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     if robots_cache is not None:
         robots_cache.unpersist()
     n_fetched = stats["n"]
-    fr = res["frontier"]
     summary = {
         "fetched": n_fetched,
         "ok": stats["n_ok"],
         "fetched_media": int(stats["n_media"]),
         "fetched_image_blobs": int(stats["n_image_blob"]),
-        "pending_next": fr["n"],
-        "pending_next_html": fr["n_html"],
-        "pending_next_media": fr["n"] - fr["n_html"],
+        **res["frontier"],
         "images": res["images"],
         "seen_total": prev.get("seen_total", 0) + n_fetched,
         "n_robots": res["discover"]["n_robots"],
@@ -575,6 +557,33 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     return summary
 
 
+def _commit_seeds(spark: SparkSession, io: TableIO, cfg: CrawlConfig, seed_ids) -> None:
+    """Commit the seed frontier as iteration -1 through the iteration's
+    admission stages: ``discover`` materializes the persisted seeds and
+    their robots cache once, and every table stages from that; the
+    manifest carries the hints an iteration's does."""
+    t0 = time.time()
+    seeds = init_frontier(spark, seed_ids, cfg).persist()
+    robots, allowed, denied = _admit(io, cfg, -1, seeds)
+    stages = [
+        ("discover", lambda: _discover(io, -1, {}, robots), ()),
+        ("frontier", lambda _disc: _stage_frontier(io, -1, allowed.repartition("host")), ("discover",)),
+        ("robots_tables", lambda disc: _stage_robots(io, -1, robots, denied, disc), ("discover",)),
+    ]
+    res, spans = _run_stages(spark.sparkContext, -1, t0, stages)
+    seeds.unpersist()
+    robots.unpersist()
+    summary = {
+        # every distinct seed is either admitted or robots-denied
+        "init_seeds": res["frontier"]["pending_next"] + res["robots_tables"],
+        **res["frontier"],
+        "n_robots": res["discover"]["n_robots"],
+        "stages": spans,
+        "decisions": {},
+    }
+    io.commit(-1, ["frontier", "robots", "robots_denied"], extra={"summary": summary})
+
+
 def run_crawl(
     spark: SparkSession,
     seed_ids: list[str] | DataFrame,
@@ -599,37 +608,15 @@ def run_crawl(
     # is also the largest run-to-run variance source).
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     summaries = []
-    # the try covers the conf flip AND the first-run init path, so an
+    # the try covers the conf flip AND the first-run seed commit, so an
     # exception anywhere (init_frontier included) still restores the
-    # caller's AQE setting and clears the job label in the finally
+    # caller's AQE setting in the finally
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         last = io.last_committed()
         if last is None:
-            spark.sparkContext.setLocalProperty(_DESC, "it=-1/init")
-            seeds = init_frontier(spark, seed_ids, cfg)
-            robots0 = ROB.fetch_robots_for_hosts(seeds.select("host"), cfg.site)
-            allowed, denied = ROB.split_by_robots(seeds, robots0)
-            io.stage(allowed.repartition("host"), "frontier", -1)
-            io.stage(robots0, "robots", -1)
-            io.stage(
-                denied.select("canon_url", "host", "page_kind").withColumn("iteration", F.lit(-1)),
-                "robots_denied",
-                -1,
-            )
-            n_seeds = (
-                seed_ids.select(seed_ids.columns[0]).distinct().count()
-                if isinstance(seed_ids, DataFrame)
-                else len(set(seed_ids))
-            )
-            spark.sparkContext.setLocalProperty(_DESC, None)
-            init_s = round(time.time() - t0, 3)
-            io.commit(
-                -1,
-                ["frontier", "robots", "robots_denied"],
-                extra={"summary": {"init_seeds": n_seeds, "stages": {"init": [0.0, init_s]},
-                                   "decisions": {}}},
-            )
+            with _job_label(spark.sparkContext, "it=-1/plan"):
+                _commit_seeds(spark, io, cfg, seed_ids)
             last = -1
         for it in range(last + 1, cfg.max_iterations):
             s = run_iteration(spark, io, cfg, it)
@@ -639,7 +626,6 @@ def run_crawl(
             if s["pending_next"] == 0:
                 break
     finally:
-        spark.sparkContext.setLocalProperty(_DESC, None)
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return {"iterations": summaries, "total_wall_s": round(time.time() - t0, 3)}
 

@@ -5,8 +5,9 @@ GETs and records which now return 404 (reference spiders.py:3472-3533,
 writing 404tts.csv / 404nms.csv). The engine expresses the probe as a
 derived frontier + one fetch pass:
 
-    id DataFrame -> entity URL column -> fetch_batch (retry policy
-    applies: a 500-then-heal URL is NOT dead) -> filter status==404 ->
+    id DataFrame -> entity URL column -> frontier rows (the shared
+    ``frontier_rows`` builder) -> fetch_drain (retry policy applies: a
+    500-then-heal URL is NOT dead) -> filter status==404 ->
     (id, canon_url) report
 
 The probe is an ordinary bounded Spark job: politeness budgets apply
@@ -20,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from film_crawler_spark.operators import frontier as FR
 from film_crawler_spark.operators.fetch import fetch_drain
-from film_crawler_spark.operators.frontier import FRONTIER_SCHEMA, seed_seq
 from film_crawler_spark.operators.politeness import PolitenessConfig
 from film_crawler_spark.sources.synthetic_site import SiteConfig, SyntheticSite
 
@@ -38,58 +39,23 @@ def probe_404(
     cfg = cfg or SiteConfig()
     pol = pol or PolitenessConfig()
     site = SyntheticSite(cfg)
-    id_col = ids.columns[0]
-
-    import pandas as pd
-
-    from film_crawler_spark.functions.urls import canonicalize_url, shard_col
 
     @F.pandas_udf("string")
     def entity_url(s):
-        fn = site.title_url if entity == "tt" else site.person_url
-        return s.map(fn)
+        return s.map(site.title_url if entity == "tt" else site.person_url)
 
-    @F.pandas_udf("string")
-    def canon(s):
-        return s.map(canonicalize_url)
-
-    @F.pandas_udf("string")
-    def seqkey(s):
-        return s.map(seed_seq)
-
-    kind = "title" if entity == "tt" else "person"
     # rank for seq: probes are order-insensitive, so the cheap
     # monotonically-increasing id is enough (no global sort needed)
-    frontier = (
-        ids.select(F.col(id_col).alias("id"))
+    frontier = FR.frontier_rows(
+        ids.select(F.col(ids.columns[0]).alias("id"))
         .distinct()
-        .withColumn("_rn", F.monotonically_increasing_id())
         .select(
             entity_url("id").alias("url"),
-            F.lit(0).alias("priority"),
-            seqkey("_rn").alias("seq"),
-            F.col("id"),
-        )
-        .select(
-            "url",
-            canon("url").alias("canon_url"),
-            F.xxhash64(canon("url")).alias("url_hash"),
-            shard_col(canon("url")).alias("shard"),
-            F.regexp_extract("url", r"https://([^/]+)/", 1).alias("host"),
-            "priority", "seq",
-            F.lit(0).alias("depth"),
-            F.lit(kind).alias("page_kind"),
-            (F.col("id") if entity == "tt" else F.lit(None).cast("string")).alias("tt"),
-            F.lit(None).cast("string").alias("rm"),
-            (F.col("id") if entity == "nm" else F.lit(None).cast("string")).alias("nm"),
-            F.lit(None).cast("string").alias("vi"),
-            F.lit(None).cast("string").alias("ev"),
-            F.lit(None).cast("string").alias("co"),
-            F.lit(0).alias("attempts"),
-            F.lit(0).alias("discovered_at_iter"),
+            F.lit("title" if entity == "tt" else "person").alias("page_kind"),
+            F.monotonically_increasing_id().alias("seq"),
+            F.col("id").alias(entity),
         )
     )
-    assert [f.name for f in FRONTIER_SCHEMA.fields] == frontier.columns
     dead_id = F.coalesce("tt", "nm").alias("id")
     # fetch_drain, not one fetch_batch: politeness budgets cap fetches
     # per host per pass, and a single pass over an id list longer than

@@ -16,18 +16,23 @@ special crawl mode:
 * drop URLs that SUCCEEDED in a later iteration already (a retried row
   can both fail in it=i and succeed in it=j>i);
 * union with whatever is still pending, commit as a fresh frontier
-  snapshot, and let the ordinary crawl loop drain it. Ordering, budget
-  and politeness all apply unchanged because repair rows keep their
-  original (priority, seq).
+  snapshot (staged by the crawl loop's counted frontier stage, so the
+  manifest carries the ``stages`` trace), and let the ordinary crawl
+  loop drain it. Ordering, budget and politeness all apply unchanged
+  because repair rows keep their original (priority, seq).
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from film_crawler_spark.operators import frontier as FR
-from film_crawler_spark.plans.crawl_loop import CrawlConfig, run_crawl
+from film_crawler_spark.plans.crawl_loop import (
+    CrawlConfig, _job_label, _run_stages, _stage_frontier, run_crawl,
+)
 from film_crawler_spark.sources.tableio import TableIO
 
 
@@ -46,8 +51,7 @@ def build_repair_frontier(io: TableIO, cfg: CrawlConfig, next_it: int) -> DataFr
     # exclude URLs that eventually fetched OK
     succeeded = io.read_log("fetch_log").filter(F.col("status") == 200).select("canon_url")
     todo = latest.join(succeeded, "canon_url", "left_anti")
-    cols = [f.name for f in FR.FRONTIER_SCHEMA.fields]
-    return todo.withColumn("discovered_at_iter", F.lit(next_it)).select(*cols)
+    return todo.withColumn("discovered_at_iter", F.lit(next_it)).select(*FR.FRONTIER_COLS)
 
 
 def run_repair(spark: SparkSession, cfg: CrawlConfig, progress: bool = False) -> dict:
@@ -59,18 +63,24 @@ def run_repair(spark: SparkSession, cfg: CrawlConfig, progress: bool = False) ->
     if last is None:
         raise RuntimeError("nothing to repair: no committed crawl in this warehouse")
     next_it = last + 1
-    repair_rows = build_repair_frontier(io, cfg, next_it)
-    if repair_rows is None:
-        return {"iterations": [], "total_wall_s": 0.0}
-    pending = io.read_snapshot("frontier", upto=last)
+    t0 = time.time()
+    with _job_label(spark.sparkContext, f"it={next_it}/plan"):
+        repair_rows = build_repair_frontier(io, cfg, next_it)
+        if repair_rows is None:
+            return {"iterations": [], "total_wall_s": 0.0}
+        pending = io.read_snapshot("frontier", upto=last)
     merged = pending.unionByName(repair_rows) if pending is not None else repair_rows
-    io.stage(merged, "frontier", next_it)
-    n = spark.read.parquet(io._tdir("frontier", next_it)).count()
+    # the crawl loop's counted frontier stage: the row count rides the write
+    res, spans = _run_stages(spark.sparkContext, next_it, t0, [
+        ("frontier", lambda: _stage_frontier(io, next_it, merged), ()),
+    ])
+    n = res["frontier"]["pending_next"]
     io.commit(
         next_it,
         ["frontier"],
         extra={"summary": {"repair_enqueued": n, "pending_next": n, "seen_total":
-                           io.manifest(last).get("summary", {}).get("seen_total", 0)}},
+                           io.manifest(last).get("summary", {}).get("seen_total", 0),
+                           "stages": spans, "decisions": {}}},
     )
     if cfg.max_iterations <= next_it + 1:
         cfg = CrawlConfig(**{**cfg.__dict__, "max_iterations": next_it + 1 + cfg.max_iterations})

@@ -10,8 +10,9 @@ ev ids -> AllEvents.csv, utils.py:64-95).
 The engine restates each as ONE small Spark job over the ordinary fetch
 operator (politeness + retry apply to seed production too):
 
-    url list -> fetch_drain (fetch_batch passes until politeness budgets
-    denied nothing) -> JVM regexp_extract_all over the body ->
+    url list -> frontier rows (the shared ``frontier_rows`` builder) ->
+    fetch_drain (fetch_batch passes until politeness budgets denied
+    nothing) -> JVM regexp_extract_all over the body ->
     explode -> distinct -> sort -> seed DataFrame
 
 Everything after the fetch is whole-stage-codegen column work — the id
@@ -26,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from film_crawler_spark.operators import frontier as FR
 from film_crawler_spark.operators.fetch import fetch_drain
-from film_crawler_spark.operators.frontier import FRONTIER_SCHEMA, seed_seq
 from film_crawler_spark.operators.politeness import PolitenessConfig
 from film_crawler_spark.sources.synthetic_site import CHARTS, SiteConfig
 
@@ -37,27 +38,14 @@ _ID_IN_HREF = {
 }
 
 
-def _url_frontier(spark: SparkSession, urls: list[tuple[str, str]], cfg: SiteConfig) -> DataFrame:
-    """Tiny frontier batch for the generator fetches. ``urls``:
-    [(url, page_kind)]. Seq is the list position (the reference fetches
-    charts in a fixed order)."""
-    from film_crawler_spark.functions.urls import canonicalize_url, shard_col, url_host
-
-    rows = [
-        (
-            u, canonicalize_url(u), 0, 0, url_host(u), 0, seed_seq(i), 0, kind,
-            None, None, None, None, None, None, 0, 0,
-        )
-        for i, (u, kind) in enumerate(urls)
-    ]
-    df = spark.createDataFrame(rows, FRONTIER_SCHEMA)
-    return df.withColumn("url_hash", F.xxhash64("canon_url")).withColumn(
-        "shard", shard_col(F.col("canon_url"))
-    )
-
-
-def _extract_ids(fetched: DataFrame, id_kind: str) -> DataFrame:
-    """Fetched pages -> distinct sorted id rows, fully JVM-side."""
+def _fetch_ids(spark: SparkSession, urls: list[tuple[str, str]], id_kind: str,
+               cfg: SiteConfig | None, pol: PolitenessConfig | None) -> DataFrame:
+    """Fetch ``urls`` ([(url, page_kind)]; seq is the list position — the
+    reference fetches charts in a fixed order) and return the distinct
+    sorted ids their pages link to, extracted fully JVM-side."""
+    ranked = [(u, kind, i) for i, (u, kind) in enumerate(urls)]
+    frontier = FR.frontier_rows(spark.createDataFrame(ranked, "url string, page_kind string, seq long"))
+    fetched = fetch_drain(frontier, cfg or SiteConfig(), pol or PolitenessConfig())
     body = F.decode(F.col("body"), "utf-8")
     return (
         fetched.filter(F.col("status") == 200)
@@ -71,11 +59,8 @@ def chart_seeds(spark: SparkSession, cfg: SiteConfig | None = None,
                 pol: PolitenessConfig | None = None) -> DataFrame:
     """getTopLowest twin (reference utils.py:97-271): fetch every chart
     page, union the ids, set-dedup, sort. Returns (id) DataFrame."""
-    cfg = cfg or SiteConfig()
-    pol = pol or PolitenessConfig()
     urls = [(f"https://www.media-h0.com/chart/{c}", "chart") for c in CHARTS]
-    fetched = fetch_drain(_url_frontier(spark, urls, cfg), cfg, pol)
-    return _extract_ids(fetched, "tt")
+    return _fetch_ids(spark, urls, "tt", cfg, pol)
 
 
 def near_year_seeds(spark: SparkSession, start_month: str, end_month: str,
@@ -86,8 +71,6 @@ def near_year_seeds(spark: SparkSession, start_month: str, end_month: str,
     intervals) -> one coming-soon page per month -> ids. The month list
     is collected (bounded: 12 rows/year — a century is 1200 URLs); the
     id extraction over the fetched pages stays fully distributed."""
-    cfg = cfg or SiteConfig()
-    pol = pol or PolitenessConfig()
     months = (
         spark.sql(
             f"SELECT explode(sequence(to_date('{start_month}-01'), "
@@ -100,8 +83,7 @@ def near_year_seeds(spark: SparkSession, start_month: str, end_month: str,
         (f"https://www.media-h0.com/movies-coming-soon/{r['month']}", "coming_soon")
         for r in months
     ]
-    fetched = fetch_drain(_url_frontier(spark, urls, cfg), cfg, pol)
-    return _extract_ids(fetched, "tt")
+    return _fetch_ids(spark, urls, "tt", cfg, pol)
 
 
 def all_event_seeds(spark: SparkSession, cfg: SiteConfig | None = None,
@@ -109,11 +91,7 @@ def all_event_seeds(spark: SparkSession, cfg: SiteConfig | None = None,
     """getEvents twin (reference utils.py:64-95): the event index page ->
     ev ids (the reference drives Selenium for this one page; the engine
     fetches it like any URL)."""
-    cfg = cfg or SiteConfig()
-    pol = pol or PolitenessConfig()
-    urls = [("https://www.media-h0.com/event/all", "event_index")]
-    fetched = fetch_drain(_url_frontier(spark, urls, cfg), cfg, pol)
-    return _extract_ids(fetched, "ev")
+    return _fetch_ids(spark, [("https://www.media-h0.com/event/all", "event_index")], "ev", cfg, pol)
 
 
 def write_seed_table(df: DataFrame, path: str) -> None:

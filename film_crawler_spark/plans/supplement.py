@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from film_crawler_spark.operators import frontier as FR
 from film_crawler_spark.operators import parse as P
 from film_crawler_spark.operators.fetch import fetch_drain, fetch_log_projection
-from film_crawler_spark.plans.crawl_loop import CrawlConfig
+from film_crawler_spark.plans.crawl_loop import CrawlConfig, _job_label, _run_stages
 from film_crawler_spark.sources.tableio import TableIO
 
 
@@ -54,7 +54,10 @@ def run_supplement(
     """Re-crawl the warehouse's reviews/news/ratings pages and append the
     delta (exactly-new children for reviews/news; a dated time-series row
     per title for ratings). Returns {'iteration': it, '<kind>_new': n,
-    'refetched': n}."""
+    'refetched': n}. Runs on the crawl loop's stage runner: ``refetch``
+    drains the re-fetch (each pass is localCheckpointed, so its result is
+    materialized), then every appended table and fetch_log stage
+    concurrently."""
     io = TableIO(spark, cfg.warehouse)
     last = io.last_committed()
     if last is None:
@@ -62,83 +65,83 @@ def run_supplement(
     it = last + 1
     t0 = time.time()
 
-    flog = io.read_log("fetch_log")
-    frontier_cols = [f.name for f in FR.FRONTIER_SCHEMA.fields]
-    targets = (
-        flog.filter(
-            F.col("page_kind").isin(*kinds)
-            & (F.col("status") == 200)
-            & (~F.col("budget_denied"))
+    with _job_label(spark.sparkContext, f"it={it}/plan"):
+        targets = (
+            io.read_log("fetch_log")
+            .filter(
+                F.col("page_kind").isin(*kinds)
+                & (F.col("status") == 200)
+                & (~F.col("budget_denied"))
+            )
+            .select(*FR.FRONTIER_COLS)
+            .withColumn("attempts", F.lit(0))
+            .dropDuplicates(["canon_url"])
         )
-        .select(*frontier_cols)
-        .withColumn("attempts", F.lit(0))
-        .dropDuplicates(["canon_url"])
-    )
 
-    fetched = fetch_drain(targets, cfg.site, cfg.politeness)
-    # fetched_at: this run's iteration-derived synthetic timestamp — the
-    # ratings parser emits it as the reference's time_stamp column
-    ok = fetched.filter(F.col("status") == 200).withColumn(
-        "fetched_at", F.lit(P.synthetic_fetch_time(it))
-    )
+    def refetch() -> dict[str, DataFrame]:
+        fetched = fetch_drain(targets, cfg.site, cfg.politeness)
+        # fetched_at: this run's iteration-derived synthetic timestamp —
+        # the ratings parser emits it as the reference's time_stamp column
+        ok = fetched.filter(F.col("status") == 200).withColumn(
+            "fetched_at", F.lit(P.synthetic_fetch_time(it))
+        )
+        new: dict[str, DataFrame] = {}
+        if "reviews" in kinds:
+            parsed = P.extract_reviews(ok)
+            existing = io.read_log("reviews")
+            new["reviews"] = (
+                parsed
+                if existing is None
+                else parsed.join(
+                    existing.select("tt", "review_id").distinct(),
+                    ["tt", "review_id"],
+                    "left_anti",
+                )
+            )
+        if "news" in kinds:
+            parsed = P.extract_news(ok).withColumn("_owner", F.coalesce("tt", "nm"))
+            existing = io.read_log("news")
+            if existing is not None:
+                # owner is coalesced on BOTH sides: tt/nm are each null on
+                # the other entity's rows, and a plain multi-column
+                # anti-join would treat null keys as never-matching
+                # (re-appending every person news row on every run)
+                seen_keys = (
+                    existing.select(
+                        F.coalesce("tt", "nm").alias("_owner"), "title", "url", "date"
+                    ).distinct()
+                )
+                parsed = parsed.join(seen_keys, ["_owner", "title", "url", "date"], "left_anti")
+            new["news"] = parsed.drop("_owner")
+        if "ratings" in kinds:
+            # time-series append (reference spiders.py:4941-4959): NO
+            # anti-join — every re-parsed title gets a new row dated with
+            # this run's fetched_at, building the rating history
+            new["ratings"] = P.extract_ratings(ok)
+        # body-free lineage of the re-fetch, same shape as the crawl's
+        # fetch_log (shared projection — the two writers must never
+        # drift). The URLs are already in the seen set, so no seen delta.
+        return {**{t: df.withColumn("iteration", F.lit(it)) for t, df in new.items()},
+                "fetch_log": fetch_log_projection(fetched, it)}
 
-    staged: list[str] = []
-    summary: dict = {"iteration": it}
-
-    def _stage_counted(df: DataFrame, table: str, key: str) -> None:
+    def counted(table: str) -> tuple:
         # the appended-row count rides the write action itself: one
         # Observation per staged delta instead of a read-back count job
-        obs = Observation(f"supp_{key}")
-        io.stage(df.observe(obs, F.count(F.lit(1)).alias("rows")), table, it)
-        staged.append(table)
-        summary[key] = obs.get["rows"]
+        def stage(plans: dict[str, DataFrame]) -> int:
+            obs = Observation(f"supp_{table}")
+            io.stage(plans[table].observe(obs, F.count(F.lit(1)).alias("rows")), table, it)
+            return obs.get["rows"]
+        return table, stage, ("refetch",)
 
-    if "reviews" in kinds:
-        parsed = P.extract_reviews(ok)
-        existing = io.read_log("reviews")
-        new = (
-            parsed
-            if existing is None
-            else parsed.join(
-                existing.select("tt", "review_id").distinct(),
-                ["tt", "review_id"],
-                "left_anti",
-            )
-        ).withColumn("iteration", F.lit(it))
-        _stage_counted(new, "reviews", "reviews_new")
-
-    if "news" in kinds:
-        parsed = P.extract_news(ok).withColumn("_owner", F.coalesce("tt", "nm"))
-        existing = io.read_log("news")
-        if existing is None:
-            new = parsed
-        else:
-            # owner is coalesced on BOTH sides: tt/nm are each null on the
-            # other entity's rows, and a plain multi-column anti-join would
-            # treat null keys as never-matching (re-appending every person
-            # news row on every run)
-            seen_keys = (
-                existing.select(
-                    F.coalesce("tt", "nm").alias("_owner"), "title", "url", "date"
-                ).distinct()
-            )
-            new = parsed.join(seen_keys, ["_owner", "title", "url", "date"], "left_anti")
-        new = new.drop("_owner").withColumn("iteration", F.lit(it))
-        _stage_counted(new, "news", "news_new")
-
-    if "ratings" in kinds:
-        # time-series append (reference spiders.py:4941-4959): NO
-        # anti-join — every re-parsed title gets a new row dated with
-        # this run's fetched_at, building the rating history
-        new = P.extract_ratings(ok).withColumn("iteration", F.lit(it))
-        _stage_counted(new, "ratings", "ratings_new")
-
-    # body-free lineage of the re-fetch, same shape as the crawl's
-    # fetch_log (shared projection — the two writers must never drift).
-    # The URLs are already in the seen set, so no seen delta.
-    supp_log = fetch_log_projection(fetched, it)
-    _stage_counted(supp_log, "fetch_log", "refetched")
-    summary["wall_s"] = round(time.time() - t0, 3)
+    staged = [t for t in ("reviews", "news", "ratings") if t in kinds] + ["fetch_log"]
+    res, spans = _run_stages(spark.sparkContext, it, t0, [("refetch", refetch, ()), *map(counted, staged)])
+    summary: dict = {
+        "iteration": it,
+        **{"refetched" if t == "fetch_log" else f"{t}_new": res[t] for t in staged},
+        "wall_s": round(time.time() - t0, 3),
+        "stages": spans,
+        "decisions": {},
+    }
     # carry the crawl's manifest hint chain forward: a resumed
     # run_iteration(it+1) reads THIS summary for its hints. The pending
     # counts pick the salted dequeue and prove the dequeue window can be

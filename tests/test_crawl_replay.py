@@ -202,6 +202,13 @@ def test_metrics_lineage_present(crawled):
         if i >= 0:
             assert {"fetch_log", "thin_fused", "discover", "frontier", "images"} <= set(s["stages"]), i
             assert set(s["decisions"]) == {"dequeue_window", "n_salts", "compact", "robots_restaged"}, i
+        else:
+            # the seed commit runs the iteration's admission stages and
+            # leaves the hints an iteration leaves for the next one
+            assert set(s["stages"]) == {"discover", "frontier", "robots_tables"}
+            assert s["init_seeds"] == len(set(SEEDS))
+            assert 0 < s["pending_next"] == s["pending_next_html"] <= s["init_seeds"]
+            assert s["pending_next_media"] == 0 and s["n_robots"] > 0
 
 
 def test_videos_match_ground_truth(crawled, sim):
@@ -443,6 +450,7 @@ def test_supplement_interleaved_resume_replays_identically(spark, tmp_path_facto
     assert supp["refetched"] > 0  # the supplement actually re-fetched pages
     assert supp["reviews_new"] == 0 and supp["news_new"] == 0  # site unchanged
     assert io_a.manifest(supp_it).get("supplement") is True
+    assert set(io_a.manifest(supp_it)["summary"]["stages"]) == {"refetch", "reviews", "news", "fetch_log"}
     res_a2 = run_crawl(
         spark, SUPP_SEEDS,
         CrawlConfig(warehouse=wh_a, site=SUPP_SITE, politeness=pol,

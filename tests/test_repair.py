@@ -16,6 +16,7 @@ from film_crawler_spark.plans.crawl_loop import CrawlConfig, run_crawl
 from film_crawler_spark.plans.repair import run_repair
 from film_crawler_spark.sources.synthetic_site import SiteConfig, SyntheticSite, make_seed_ids
 from film_crawler_spark.sources.tableio import TableIO
+from test_stage_runner import _descriptions_since, _mark
 
 SITE = SiteConfig(max_images_per_title=30, p_500=0.15, p_404=0.05)
 # retry cap BELOW the site's max heal attempt => some 500s exhaust
@@ -33,7 +34,14 @@ def repaired(spark, tmp_path_factory):
         for r in io.read_log("dead_letter").collect()
     }
     assert dead_before, "test needs a non-empty dead-letter backlog"
+    repair_it = io.last_committed() + 1
+    mark = _mark(spark.sparkContext)
     run_repair(spark, cfg)
+    # the repair commit and the crawl it resumes label every job with its
+    # iteration; the repair manifest carries its stage trace
+    descs = _descriptions_since(spark.sparkContext, mark)
+    assert descs and all(d and d.startswith("it=") for d in descs.values()), descs
+    assert set(io.manifest(repair_it)["summary"]["stages"]) == {"frontier"}
     return io, dead_before
 
 

@@ -12,6 +12,8 @@ from film_crawler_spark.plans.crawl_loop import _run_stages
 
 
 def _descriptions_since(sc, mark: int) -> dict[int, str | None]:
+    # the status store is fed by the async listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     store = sc._jsc.sc().statusStore()
     out = {}
     for jid in sc.statusTracker().getJobIdsForGroup(None):

@@ -15,6 +15,7 @@ from film_crawler_spark.plans.crawl_loop import CrawlConfig, run_crawl
 from film_crawler_spark.plans.supplement import run_supplement
 from film_crawler_spark.sources.synthetic_site import SiteConfig, make_seed_ids
 from film_crawler_spark.sources.tableio import TableIO
+from test_stage_runner import _descriptions_since, _mark
 
 SITE = SiteConfig(max_images_per_title=10, max_images_per_person=5,
                   max_videos_per_title=5, max_videos_per_person=3)
@@ -57,7 +58,14 @@ def test_supplement_appends_exactly_new_children(spark, warehouse):
     grown = dataclasses.replace(SITE, supplement_extra=EXTRA)
     cfg = CrawlConfig(warehouse=warehouse, site=grown, politeness=POL)
     crawl_summary = io.manifest(io.last_committed())["summary"]
+    mark = _mark(spark.sparkContext)
     s = run_supplement(spark, cfg)
+    # the supplement runs on the crawl loop's stage runner: every job is
+    # labelled with its iteration and the manifest carries the trace
+    descs = _descriptions_since(spark.sparkContext, mark)
+    assert descs and all(d and d.startswith(f"it={s['iteration']}/") for d in descs.values()), descs
+    assert set(io.manifest(s["iteration"])["summary"]["stages"]) == {
+        "refetch", "reviews", "news", "fetch_log"}
     # the manifest hint chain must survive a supplement commit: a resumed
     # run_iteration reads its pending counts (dequeue-skip proof), n_robots
     # (robots restage) and the running seen_total from the LAST summary
@@ -137,14 +145,12 @@ def test_supplement_counts_ride_the_write_jobs(spark, warehouse):
     job per staged table); a regression to read-back counts adds one job
     per table and trips the bound."""
     sc = spark.sparkContext
-    io = TableIO(spark, warehouse)
     cfg = CrawlConfig(warehouse=warehouse, site=SITE, politeness=POL)
-    sc.setJobGroup("supp_jobs", "supplement job-count gate")
-    try:
-        run_supplement(spark, cfg)  # reviews + news, zero new rows
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("supp_jobs")
+    # a job-id mark, not a job group: the staging writes run on the stage
+    # runner's threads, which do not inherit the caller's job group
+    mark = _mark(sc)
+    run_supplement(spark, cfg)  # reviews + news, zero new rows
+    jobs = list(_descriptions_since(sc, mark))
     # measured at this fixture: 22 jobs (the budget-bounded fetch_drain
     # loop's per-pass isEmpty/dequeue/checkpoint chain + one write job
     # per staged table, counts observed in-job). The old read-back

@@ -146,12 +146,6 @@ def scan(ev_dir: str) -> dict:
     return {"stages": rows, "jobs": jobs, "tasks": tasks, "cores": cores}
 
 
-def profile_dir(ev_dir: str) -> list[dict]:
-    """Per-stage aggregate rows across every event log under ``ev_dir``,
-    sorted by total executor run time descending."""
-    return scan(ev_dir)["stages"]
-
-
 def by_label(rows: list[dict]) -> list[dict]:
     """Executor time per job label (``it=<i>/<stage>`` for crawl jobs),
     sorted by run time descending."""
