@@ -8,7 +8,7 @@ the frontier additions, and the prefix test runs JVM-side via
 
 New hosts are discovered incrementally: any host appearing in frontier
 candidates that has no cache row gets its robots fetched (one resolver
-call per host inside an Arrow batch) and appended to the cache.
+call per host, in one Python task); the caller appends those rows.
 """
 
 from __future__ import annotations
@@ -32,7 +32,9 @@ ROBOTS_SCHEMA = T.StructType(
 
 
 def fetch_robots_for_hosts(hosts: DataFrame, site_cfg: SiteConfig) -> DataFrame:
-    """hosts: one-column DataFrame (host). Resolver call per distinct host."""
+    """hosts: one-column DataFrame (host). Resolver call per distinct
+    host, in one task: a single partition satisfies the distinct, so no
+    exchange is planned."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         site = SyntheticSite(site_cfg)
@@ -43,18 +45,17 @@ def fetch_robots_for_hosts(hosts: DataFrame, site_cfg: SiteConfig) -> DataFrame:
                 rows.append((h, r["disallow"], r["crawl_delay_ms"]))
             yield pd.DataFrame(rows, columns=["host", "disallow", "crawl_delay_ms"])
 
-    return hosts.select("host").distinct().mapInPandas(_run, ROBOTS_SCHEMA)
+    return hosts.select("host").coalesce(1).distinct().mapInPandas(_run, ROBOTS_SCHEMA)
 
 
-def update_robots_cache(
+def fetch_new_robots(
     cache: DataFrame | None, candidate_hosts: DataFrame, site_cfg: SiteConfig
 ) -> DataFrame:
-    """Fetch robots for hosts not yet cached; return the grown cache."""
+    """Robots rows of the candidate hosts that ``cache`` lacks."""
     hosts = candidate_hosts.select("host").distinct()
-    if cache is None:
-        return fetch_robots_for_hosts(hosts, site_cfg)
-    new_hosts = hosts.join(cache.select("host"), "host", "left_anti")
-    return cache.unionByName(fetch_robots_for_hosts(new_hosts, site_cfg))
+    if cache is not None:
+        hosts = hosts.join(cache.select("host"), "host", "left_anti")
+    return fetch_robots_for_hosts(hosts, site_cfg)
 
 
 def split_by_robots(candidates: DataFrame, robots: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -31,6 +31,9 @@ adaptive choices taken).
 The seed commit (iteration -1) runs the iteration's own admission
 stages (``_commit_seeds``), and supplement and repair commit through
 the same runner, so every job and manifest of a crawl is traced alike.
+All four commit through ``_commit``, which passes on the hints a
+manifest does not set; the robots cache is re-staged iff ``discover``
+counted robots rows fetched for new hosts.
 
 Resume: ``run_crawl`` with the same warehouse continues after the last
 committed iteration — killed mid-iteration, the partial stage dirs are
@@ -172,37 +175,24 @@ def _run_stages(sc, it: int, t0: float, stages: list[tuple]) -> tuple[dict, dict
 
 
 def _admit(io: TableIO, cfg: CrawlConfig, it: int, candidates: DataFrame):
-    """Grow the robots cache by the persisted ``candidates``' new hosts;
-    returns ``(cache, allowed, denied)``. The cache is persisted: it is a
-    broadcast subplan (with a Python robots-fetch stage) of several
-    staging jobs, and broadcast exchanges are not reused across jobs."""
-    cache = ROB.update_robots_cache(
-        io.read_snapshot("robots", upto=it - 1), candidates.select("host"), cfg.site
-    ).persist()
-    return (cache, *ROB.split_by_robots(candidates, cache))
+    """Fetch robots for the persisted ``candidates``' new hosts; returns
+    ``(new, cache, allowed, denied)``, ``cache`` being the committed
+    snapshot plus ``new``. ``new`` is persisted: its Python fetch feeds
+    the count and every broadcast of the cache (broadcast exchanges are
+    not reused across jobs)."""
+    snapshot = io.read_snapshot("robots", upto=it - 1, schema=ROB.ROBOTS_SCHEMA)
+    new = ROB.fetch_new_robots(snapshot, candidates, cfg.site).persist()
+    cache = new if snapshot is None else snapshot.unionByName(new)
+    return (new, cache, *ROB.split_by_robots(candidates, cache))
 
 
-def _discover(io: TableIO, it: int, prev: dict, cache: DataFrame | None) -> dict:
-    """Count the grown robots cache (``None`` on a media-only wave). The
-    count also materializes the candidates: update_robots_cache's
-    host-distinct scans every candidate partition through their persist."""
-    if cache is not None:
-        n_rob = cache.count()
-    else:
-        # carry the previous host count through the media-only wave; a
-        # manifest without the key (written before it existed, or by a
-        # repair) falls back to counting the committed robots snapshot
-        n_rob = prev.get("n_robots")
-        if n_rob is None:
-            rb = io.read_snapshot("robots", upto=it - 1)
-            n_rob = rb.count() if rb is not None else 0
-    # re-stage the robots cache only when a fetch for a NEW host
-    # happened (host count grew). After the first few waves the host
-    # set is fixed, and skipping the write drops one Spark job per
-    # iteration; readers fall back to the last committed robots
-    # snapshot because the commit manifest lists only tables actually
-    # staged this iteration.
-    return {"n_robots": n_rob, "restage": cache is not None and n_rob != prev.get("n_robots")}
+def _discover(new: DataFrame | None) -> int:
+    """Count the robots rows fetched for new hosts (``None`` on a
+    media-only wave: none). The count also materializes the candidates
+    (the host distinct scans them through their persist). The cache is
+    re-staged only when it grew: readers fall back to the last committed
+    robots snapshot, as a manifest lists only the tables it staged."""
+    return new.count() if new is not None else 0
 
 
 def _stage_frontier(io: TableIO, it: int, df: DataFrame) -> dict:
@@ -216,10 +206,11 @@ def _stage_frontier(io: TableIO, it: int, df: DataFrame) -> dict:
     return {"pending_next": n, "pending_next_html": n_html, "pending_next_media": n - n_html}
 
 
-def _stage_robots(io: TableIO, it: int, cache: DataFrame | None, denied: DataFrame, disc: dict) -> int:
-    """Stage the robots cache (if ``discover`` says it grew) and the
-    robots_denied delta; returns the number of denied candidates."""
-    if disc["restage"]:
+def _stage_robots(io: TableIO, it: int, cache: DataFrame | None, denied: DataFrame, n_new: int) -> int:
+    """Stage the robots cache (if ``discover`` counted ``n_new`` > 0 new
+    rows) and the robots_denied delta; returns the number of denied
+    candidates."""
+    if n_new:
         io.stage(cache, "robots", it)
     denied_delta = denied.select("canon_url", "host", "page_kind").withColumn("iteration", F.lit(it))
     if cache is None:
@@ -229,6 +220,20 @@ def _stage_robots(io: TableIO, it: int, cache: DataFrame | None, denied: DataFra
     obs = Observation(f"robots_denied_{it}")
     io.stage(denied_delta.observe(obs, F.count(F.lit(1)).alias("n")), "robots_denied", it)
     return obs.get["n"]
+
+
+_HINTS = ("seen_total", "pending_next", "pending_next_html", "pending_next_media")
+
+
+def _commit(io: TableIO, it: int, tables: list[str], summary: dict, **extra) -> None:
+    """Commit ``tables`` and ``summary`` as iteration ``it``. The hints
+    the summary leaves unset pass on from iteration ``it - 1``: the next
+    iteration's dequeue choices read the pending counts."""
+    prev = io.manifest(it - 1).get("summary", {}) if it >= 0 else {}
+    for key in _HINTS:
+        if key not in summary and key in prev:
+            summary[key] = prev[key]
+    io.commit(it, tables, extra={"summary": summary, **extra})
 
 
 def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> dict:
@@ -242,13 +247,13 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     pol = cfg.politeness
     t0 = time.time()
 
-    pending = io.read_snapshot("frontier", upto=it - 1)
+    pending = io.read_snapshot("frontier", upto=it - 1, schema=FR.FRONTIER_SCHEMA)
     if pending is None:
         raise RuntimeError("frontier not initialized — call run_crawl")
 
     # driver-side size hints from the previous commit's manifest (free —
     # no Spark job) drive the adaptive physical choices below
-    prev = io.manifest(it - 1).get("summary", {}) if it - 1 in set(io.committed_iterations()) else {}
+    prev = io.manifest(it - 1).get("summary", {})
     pending_hint = prev.get("pending_next", 0)
 
     # --- dequeue: per-kind budgets (reference throttles pages, not media) ---
@@ -262,13 +267,9 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # the decision derives from committed manifest counts only, so
     # resume replays it identically.
     n_salts = cfg.n_salts if pending_hint >= cfg.salt_min_pending else 1
-    hint_html = prev.get("pending_next_html")
-    hint_media = prev.get("pending_next_media")
     skip_window = (
-        hint_html is not None
-        and hint_html <= pol.budget_html
-        and hint_media is not None
-        and hint_media <= pol.budget_img
+        prev.get("pending_next_html", float("inf")) <= pol.budget_html
+        and prev.get("pending_next_media", float("inf")) <= pol.budget_img
     )
     dequeued = pending if skip_window else FR.dequeue(pending, pol.budget_html, pol.budget_img, n_salts)
 
@@ -368,9 +369,9 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
         )
         # --- robots filter: only the robots-dependent stages (frontier,
         # robots_tables) wait on its ``discover`` count
-        robots_cache, discovered, robots_denied = _admit(io, cfg, it, discovered_all)
+        robots_new, robots_cache, discovered, robots_denied = _admit(io, cfg, it, discovered_all)
     else:
-        discovered_all = robots_cache = None
+        discovered_all = robots_new = robots_cache = None
         discovered = robots_denied = spark.createDataFrame([], FR.FRONTIER_SCHEMA)
 
     # --- seen filter: committed seen + this iteration's attempts + pending
@@ -378,9 +379,9 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # derive from the STAGED fetch_log parquet (body-free) — one scan of
     # the fat body cache writes fetch_log, and the bookkeeping plans then
     # read kilobyte-scale columns instead of re-scanning gigabytes.
-    seen_exact = io.read_log("seen", upto=it - 1)
     seen_delta = attempted.select("canon_url", "url_hash", "shard", "host", "status")
-    all_seen = seen_delta if seen_exact is None else seen_exact.select(*seen_delta.columns).unionByName(seen_delta)
+    seen_exact = io.read_log("seen", upto=it - 1, schema=seen_delta.schema)
+    all_seen = seen_delta if seen_exact is None else seen_exact.unionByName(seen_delta)
     # periodic log compaction (see CrawlConfig.compact_every)
     do_compact = it > 0 and cfg.compact_every > 0 and it % cfg.compact_every == 0
     leftover = FR.remaining(pending, flog)
@@ -500,8 +501,8 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
         ("thin_fused", lambda: fused_stage(
             ok, io, it, exclude=frozenset({"captions"}) if do_compact else frozenset(),
             kinds_present=kinds_present, parallelism=dp), ()),
-        ("discover", lambda: _discover(io, it, prev, robots_cache), ()),
-        ("frontier", lambda _disc: _stage_frontier(io, it, next_pending), ("discover",)),
+        ("discover", lambda: _discover(robots_new), ()),
+        ("frontier", lambda _n: _stage_frontier(io, it, next_pending), ("discover",)),
         ("seen", lambda: io.stage(all_seen if do_compact else seen_delta, "seen", it), ()),
         *([("captions", lambda: io.stage(caps_base, "captions", it), ())] if do_compact else []),
         ("video_files", lambda: _stage_if("video_blob", video_files, "video_files"), ()),
@@ -512,18 +513,16 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
         ("renditions", lambda: _stage_if("image_blob", renditions, "renditions"), ()),
         ("dead_letter", lambda: io.stage(dead.withColumn("iteration", F.lit(it)), "dead_letter", it), ()),
         ("metrics", lambda: io.stage(metrics, "metrics", it), ()),
-        ("robots_tables", lambda disc: _stage_robots(io, it, robots_cache, robots_denied, disc),
+        ("robots_tables", lambda n_new: _stage_robots(io, it, robots_cache, robots_denied, n_new),
          ("discover",)),
         ("images", _images, ("thin_fused",) if has_blobs and not do_compact else ()),
     ]
     res, stage_spans = _run_stages(spark.sparkContext, it, t0, stages)
     spans.update(stage_spans)
 
-    fetched.unpersist()
-    if discovered_all is not None:
-        discovered_all.unpersist()
-    if robots_cache is not None:
-        robots_cache.unpersist()
+    for df in (fetched, discovered_all, robots_new):
+        if df is not None:
+            df.unpersist()
     n_fetched = stats["n"]
     summary = {
         "fetched": n_fetched,
@@ -533,7 +532,7 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
         **res["frontier"],
         "images": res["images"],
         "seen_total": prev.get("seen_total", 0) + n_fetched,
-        "n_robots": res["discover"]["n_robots"],
+        "robots_fetched": res["discover"],
         "wall_s": round(time.time() - t0, 3),
         "staged_rows": res["thin_fused"],
         # per-stage [start_s, end_s] from the iteration start
@@ -544,44 +543,39 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
             "dequeue_window": "skipped" if skip_window else "run",
             "n_salts": n_salts,
             "compact": do_compact,
-            "robots_restaged": res["discover"]["restage"],
+            "robots_restaged": res["discover"] > 0,
         },
     }
-    extra = {"summary": summary}
-    if do_compact:
-        extra["bases"] = {"seen": it, "captions": it}
-    committed_tables = [
-        t for t in RESULT_TABLES if t != "robots" or res["discover"]["restage"]
-    ]
-    io.commit(it, committed_tables, extra=extra)
+    bases = {"bases": {"seen": it, "captions": it}} if do_compact else {}
+    _commit(io, it, [t for t in RESULT_TABLES if t != "robots" or res["discover"]], summary, **bases)
     return summary
 
 
 def _commit_seeds(spark: SparkSession, io: TableIO, cfg: CrawlConfig, seed_ids) -> None:
     """Commit the seed frontier as iteration -1 through the iteration's
     admission stages: ``discover`` materializes the persisted seeds and
-    their robots cache once, and every table stages from that; the
+    their hosts' robots rows once, and every table stages from that; the
     manifest carries the hints an iteration's does."""
     t0 = time.time()
     seeds = init_frontier(spark, seed_ids, cfg).persist()
-    robots, allowed, denied = _admit(io, cfg, -1, seeds)
+    new, robots, allowed, denied = _admit(io, cfg, -1, seeds)
     stages = [
-        ("discover", lambda: _discover(io, -1, {}, robots), ()),
-        ("frontier", lambda _disc: _stage_frontier(io, -1, allowed.repartition("host")), ("discover",)),
-        ("robots_tables", lambda disc: _stage_robots(io, -1, robots, denied, disc), ("discover",)),
+        ("discover", lambda: _discover(new), ()),
+        ("frontier", lambda _n: _stage_frontier(io, -1, allowed.repartition("host")), ("discover",)),
+        ("robots_tables", lambda n_new: _stage_robots(io, -1, robots, denied, n_new), ("discover",)),
     ]
     res, spans = _run_stages(spark.sparkContext, -1, t0, stages)
     seeds.unpersist()
-    robots.unpersist()
+    new.unpersist()
     summary = {
         # every distinct seed is either admitted or robots-denied
         "init_seeds": res["frontier"]["pending_next"] + res["robots_tables"],
         **res["frontier"],
-        "n_robots": res["discover"]["n_robots"],
+        "robots_fetched": res["discover"],
         "stages": spans,
         "decisions": {},
     }
-    io.commit(-1, ["frontier", "robots", "robots_denied"], extra={"summary": summary})
+    _commit(io, -1, ["frontier", "robots_denied", *(["robots"] if res["discover"] else [])], summary)
 
 
 def run_crawl(

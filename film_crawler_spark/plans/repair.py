@@ -17,8 +17,9 @@ special crawl mode:
   can both fail in it=i and succeed in it=j>i);
 * union with whatever is still pending, commit as a fresh frontier
   snapshot (staged by the crawl loop's counted frontier stage, so the
-  manifest carries the ``stages`` trace), and let the ordinary crawl
-  loop drain it. Ordering, budget and politeness all apply unchanged
+  manifest carries the ``stages`` trace and the per-kind pending hints
+  the next iteration's dequeue-skip proof reads), and let the ordinary
+  crawl loop drain it. Ordering, budget and politeness all apply unchanged
   because repair rows keep their original (priority, seq).
 """
 
@@ -31,7 +32,7 @@ from pyspark.sql import functions as F
 
 from film_crawler_spark.operators import frontier as FR
 from film_crawler_spark.plans.crawl_loop import (
-    CrawlConfig, _job_label, _run_stages, _stage_frontier, run_crawl,
+    CrawlConfig, _commit, _job_label, _run_stages, _stage_frontier, run_crawl,
 )
 from film_crawler_spark.sources.tableio import TableIO
 
@@ -74,14 +75,8 @@ def run_repair(spark: SparkSession, cfg: CrawlConfig, progress: bool = False) ->
     res, spans = _run_stages(spark.sparkContext, next_it, t0, [
         ("frontier", lambda: _stage_frontier(io, next_it, merged), ()),
     ])
-    n = res["frontier"]["pending_next"]
-    io.commit(
-        next_it,
-        ["frontier"],
-        extra={"summary": {"repair_enqueued": n, "pending_next": n, "seen_total":
-                           io.manifest(last).get("summary", {}).get("seen_total", 0),
-                           "stages": spans, "decisions": {}}},
-    )
+    _commit(io, next_it, ["frontier"], {"repair_enqueued": res["frontier"]["pending_next"],
+                                        **res["frontier"], "stages": spans, "decisions": {}})
     if cfg.max_iterations <= next_it + 1:
         cfg = CrawlConfig(**{**cfg.__dict__, "max_iterations": next_it + 1 + cfg.max_iterations})
     return run_crawl(spark, [], cfg, progress=progress)

@@ -15,8 +15,9 @@ implements the same semantics directly:
   ``<root>/<table>/it=<i>/`` (overwrite-idempotent: re-running a failed
   iteration simply rewrites the same directory);
 * the commit point is a single JSON manifest
-  ``<root>/_commits/<i>.json`` written via temp-file + atomic rename —
-  readers only ever see iterations with a manifest;
+  ``<root>/_commits/<i>.json`` written via temp-file + atomic hard link —
+  readers only ever see iterations with a manifest, and a second commit
+  of one iteration fails;
 * reads union the committed ``it=`` directories (snapshot tables read
   only the latest committed iteration).
 
@@ -93,7 +94,9 @@ class TableIO:
         pq.write_table(empty, os.path.join(d, "part-00000-empty.parquet"))
 
     def commit(self, iteration: int, tables: list[str], extra: dict | None = None) -> None:
-        """Atomic commit point: temp-write + rename of the manifest."""
+        """Atomic commit point: temp-write + hard link of the manifest.
+        ``os.link`` refuses an existing target, so committing an
+        iteration that already has a manifest raises FileExistsError."""
         manifest = {
             "iteration": iteration,
             "tables": sorted(tables),
@@ -103,7 +106,10 @@ class TableIO:
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_commits"), suffix=".tmp")
         with os.fdopen(fd, "w") as f:
             json.dump(manifest, f)
-        os.replace(tmp, self._commit_path(iteration))
+        try:
+            os.link(tmp, self._commit_path(iteration))
+        finally:
+            os.unlink(tmp)
 
     # -- read side --------------------------------------------------------------
 
@@ -121,7 +127,7 @@ class TableIO:
 
     def manifest(self, iteration: int) -> dict:
         """Committed manifests are immutable (written once via atomic
-        rename), so they are cached per TableIO instance: _committed_dirs
+        link), so they are cached per TableIO instance: _committed_dirs
         walks every prior manifest on every read, and uncached that made
         per-iteration driver I/O grow linearly with crawl age (O(N^2)
         open+json.load over a whole crawl)."""
@@ -154,21 +160,23 @@ class TableIO:
                         dirs.append(d)
         return dirs
 
-    def read_log(self, table: str, upto: int | None = None) -> DataFrame | None:
+    def read_log(self, table: str, upto: int | None = None, schema=None) -> DataFrame | None:
         """Union of all committed deltas (log-structured tables: seen,
-        images, metrics, dead_letter...). None if nothing committed."""
+        images, metrics, dead_letter...). None if nothing committed.
+        A known ``schema`` skips parquet schema inference (a Spark job)."""
         dirs = self._committed_dirs(table, upto)
         if not dirs:
             return None
-        df = self.spark.read.option("basePath", os.path.join(self.root, table)).parquet(*dirs)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        df = reader.option("basePath", os.path.join(self.root, table)).parquet(*dirs)
         # drop the directory-partition column; tables carry an explicit
         # `iteration` column where lineage matters
         return df.drop("it")
 
-    def read_snapshot(self, table: str, upto: int | None = None) -> DataFrame | None:
+    def read_snapshot(self, table: str, upto: int | None = None, schema=None) -> DataFrame | None:
         """Latest committed snapshot (snapshot tables: frontier pending,
         robots)."""
         dirs = self._committed_dirs(table, upto)
         if not dirs:
             return None
-        return self.spark.read.parquet(dirs[-1])
+        return (self.spark.read if schema is None else self.spark.read.schema(schema)).parquet(dirs[-1])

@@ -41,7 +41,16 @@ def repaired(spark, tmp_path_factory):
     # iteration; the repair manifest carries its stage trace
     descs = _descriptions_since(spark.sparkContext, mark)
     assert descs and all(d and d.startswith("it=") for d in descs.values()), descs
-    assert set(io.manifest(repair_it)["summary"]["stages"]) == {"frontier"}
+    repair = io.manifest(repair_it)["summary"]
+    assert set(repair["stages"]) == {"frontier"}
+    # the repair manifest carries every pending hint, so the next
+    # iteration can prove the dequeue skip, and that iteration re-stages
+    # the robots cache only if it fetched robots for a new host
+    assert repair["pending_next_html"] + repair["pending_next_media"] == repair["pending_next"]
+    after = io.manifest(repair_it + 1)
+    restaged = after["summary"]["robots_fetched"] > 0
+    assert after["summary"]["decisions"]["robots_restaged"] == restaged
+    assert ("robots" in after["tables"]) == restaged
     return io, dead_before
 
 

@@ -4,6 +4,9 @@ must converge to logically identical tables vs an uninterrupted run
 spiders.py:215-218, 278-281 — the engine's manifest commit supersedes
 the .bak dance)."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from film_crawler_spark.operators.politeness import PolitenessConfig
@@ -29,10 +32,21 @@ def _snapshot(io: TableIO) -> dict:
     return out
 
 
-def test_resume_equals_uninterrupted(spark, tmp_path):
-    wh_a, wh_b = str(tmp_path / "a"), str(tmp_path / "b")
-    # uninterrupted
-    run_crawl(spark, SEEDS, CrawlConfig(warehouse=wh_a, site=SITE, politeness=POL, max_iterations=64))
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    """One uninterrupted crawl that never compacts: the reference run of
+    the resume and compaction gates, and the termination test's crawl.
+    Compaction is a physical choice only, so it also stands in for the
+    default-config crawl."""
+    wh = str(tmp_path_factory.mktemp("uninterrupted"))
+    res = run_crawl(spark, SEEDS, CrawlConfig(
+        warehouse=wh, site=SITE, politeness=POL, max_iterations=64, compact_every=0))
+    return TableIO(spark, wh), res
+
+
+def test_resume_equals_uninterrupted(spark, tmp_path, uninterrupted):
+    io_a, _ = uninterrupted
+    wh_b = str(tmp_path / "b")
     # interrupted after 2 iterations, then resumed (same warehouse)
     cfg_b = CrawlConfig(warehouse=wh_b, site=SITE, politeness=POL, max_iterations=2)
     run_crawl(spark, SEEDS, cfg_b)
@@ -41,28 +55,26 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
     cfg_b2 = CrawlConfig(warehouse=wh_b, site=SITE, politeness=POL, max_iterations=64)
     run_crawl(spark, SEEDS, cfg_b2)
 
-    snap_a, snap_b = _snapshot(TableIO(spark, wh_a)), _snapshot(io_b)
+    snap_a, snap_b = _snapshot(io_a), _snapshot(io_b)
     for t in snap_a:
         assert snap_a[t] == snap_b[t], f"table {t} diverged after resume"
 
 
-def test_compaction_invariance(spark, tmp_path):
+def test_compaction_invariance(spark, tmp_path, uninterrupted):
     """Seen/caption log compaction is a physical choice only: a crawl
     compacting every 2 iterations must produce byte-identical logical
     tables vs one that never compacts, resume across a compaction
     boundary included — while reads touch O(compact_every) directories
     instead of O(crawl age)."""
-    wh_n = str(tmp_path / "nocompact")
+    io_n, _ = uninterrupted
     wh_c = str(tmp_path / "compact")
-    run_crawl(spark, SEEDS, CrawlConfig(
-        warehouse=wh_n, site=SITE, politeness=POL, max_iterations=64, compact_every=0))
     # compacted run, interrupted right after a compaction boundary
     cfg1 = CrawlConfig(warehouse=wh_c, site=SITE, politeness=POL,
                        max_iterations=3, compact_every=2)
     run_crawl(spark, SEEDS, cfg1)
     run_crawl(spark, SEEDS, CrawlConfig(
         warehouse=wh_c, site=SITE, politeness=POL, max_iterations=64, compact_every=2))
-    io_n, io_c = TableIO(spark, wh_n), TableIO(spark, wh_c)
+    io_c = TableIO(spark, wh_c)
     snap_n, snap_c = _snapshot(io_n), _snapshot(io_c)
     for t in snap_n:
         assert snap_n[t] == snap_c[t], f"table {t} diverged under compaction"
@@ -77,12 +89,27 @@ def test_compaction_invariance(spark, tmp_path):
     )
 
 
-def test_crawl_terminates_with_empty_frontier(spark, tmp_path):
-    wh = str(tmp_path / "c")
-    res = run_crawl(spark, SEEDS, CrawlConfig(warehouse=wh, site=SITE, politeness=POL, max_iterations=64))
+def test_crawl_terminates_with_empty_frontier(uninterrupted):
+    io, res = uninterrupted
     assert res["iterations"][-1]["pending_next"] == 0
-    io = TableIO(spark, wh)
     pending = io.read_snapshot("frontier")
     assert pending.count() == 0
     # budget_denied never fires when dequeue caps == bucket budgets
     assert io.read_log("fetch_log").filter(F.col("budget_denied")).count() == 0
+
+
+def test_second_writer_cannot_overwrite_a_commit(spark, tmp_path):
+    """Two writers on one warehouse: the second commit of an iteration
+    raises instead of replacing the first manifest."""
+    wh = str(tmp_path / "w")
+    first, second = TableIO(spark, wh), TableIO(spark, wh)
+    first.commit(0, ["frontier"], extra={"summary": {"writer": 1}})
+    with open(first._commit_path(0)) as f:
+        committed = f.read()
+    with pytest.raises(FileExistsError):
+        second.commit(0, ["seen"], extra={"summary": {"writer": 2}})
+    with open(first._commit_path(0)) as f:
+        assert f.read() == committed
+    assert TableIO(spark, wh).manifest(0)["summary"] == {"writer": 1}
+    # no temp file is left behind by either writer
+    assert os.listdir(os.path.join(wh, "_commits")) == [os.path.basename(first._commit_path(0))]

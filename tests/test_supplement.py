@@ -66,12 +66,11 @@ def test_supplement_appends_exactly_new_children(spark, warehouse):
     assert descs and all(d and d.startswith(f"it={s['iteration']}/") for d in descs.values()), descs
     assert set(io.manifest(s["iteration"])["summary"]["stages"]) == {
         "refetch", "reviews", "news", "fetch_log"}
-    # the manifest hint chain must survive a supplement commit: a resumed
-    # run_iteration reads its pending counts (dequeue-skip proof), n_robots
-    # (robots restage) and the running seen_total from the LAST summary
+    # the manifest hints must survive a supplement commit: a resumed
+    # run_iteration reads its pending counts (dequeue-skip proof) and the
+    # running seen_total from the LAST summary
     supp_summary = io.manifest(io.last_committed())["summary"]
-    for key in ("seen_total", "pending_next", "pending_next_html", "pending_next_media",
-                "n_robots"):
+    for key in ("seen_total", "pending_next", "pending_next_html", "pending_next_media"):
         assert supp_summary[key] == crawl_summary[key], key
     assert s["reviews_new"] == EXTRA * ok_pages["reviews"]
     assert s["news_new"] == EXTRA * ok_pages["news"]
