@@ -214,3 +214,12 @@ def fetch_log_projection(fetched: DataFrame, it: int) -> DataFrame:
         F.spark_partition_id().alias("partition_id"),
         F.length("body").alias("body_len"),
     ).withColumn("iteration", F.lit(it))
+
+
+def empty_fetch_log(spark) -> DataFrame:
+    """A zero-row fetch_log frame: ``fetch_log_projection`` planned over
+    an empty fetched frame (a local relation, so no Spark job). Its
+    schema is the committed log's, so readers skip schema inference."""
+    from film_crawler_spark.operators.frontier import FRONTIER_SCHEMA
+
+    return fetch_log_projection(spark.createDataFrame([], fetched_schema(FRONTIER_SCHEMA)), 0)

@@ -9,8 +9,11 @@ out, checkpoint + metrics commit per epoch — see SURVEY.md §3.1):
     parse (discover links / titles / captions / decode blobs) -->
     seen-filter (one exact anti-join against seen + pending) -->
     stage {frontier(it+1), seen Δ, titles Δ, captions Δ,
-           renditions Δ, images Δ, dead_letter Δ, metrics Δ}
+           renditions Δ, images Δ, dead_letter Δ}
     --> atomic manifest commit(it)
+
+Per-iteration metrics are not staged: ``metrics_view`` groups the
+committed fetch_log, whose rows carry the partition lineage.
 
 Structured Streaming is deliberately NOT used here: each iteration's
 discoveries are the next iteration's input (a feedback edge streaming
@@ -55,9 +58,10 @@ from film_crawler_spark.functions.urls import shard_col
 from film_crawler_spark.operators import frontier as FR
 from film_crawler_spark.operators import parse as P
 from film_crawler_spark.operators import robots as ROB
+from film_crawler_spark.operators.caching import cache_scope, scoped_persist
 from film_crawler_spark.operators.fetch import fetch_batch, fetch_log_projection
 from film_crawler_spark.operators.politeness import PolitenessConfig
-from film_crawler_spark.plans.fused_staging import stage_thin_tables as fused_stage
+from film_crawler_spark.plans.fused_staging import _staged_schema, stage_thin_tables as fused_stage
 from film_crawler_spark.sources.synthetic_site import SiteConfig, SyntheticSite
 from film_crawler_spark.sources.tableio import TableIO
 
@@ -67,8 +71,8 @@ _DESC = "spark.job.description"
 
 RESULT_TABLES = [
     "frontier", "seen", "titles", "captions", "sections", "reviews",
-    "persons", "credits", "renditions", "images", "dead_letter", "metrics",
-    "fetch_log", "robots", "robots_denied",
+    "persons", "credits", "renditions", "images", "dead_letter", "fetch_log",
+    "robots", "robots_denied",
     # round-2 entities: videos (F2), news (O5), ratings, person aux
     # sections, events (ev), companies (co)
     "videos", "video_files", "news", "ratings", "psections",
@@ -181,7 +185,7 @@ def _admit(io: TableIO, cfg: CrawlConfig, it: int, candidates: DataFrame):
     the count and every broadcast of the cache (broadcast exchanges are
     not reused across jobs)."""
     snapshot = io.read_snapshot("robots", upto=it - 1, schema=ROB.ROBOTS_SCHEMA)
-    new = ROB.fetch_new_robots(snapshot, candidates, cfg.site).persist()
+    new = scoped_persist(ROB.fetch_new_robots(snapshot, candidates, cfg.site))
     cache = new if snapshot is None else snapshot.unionByName(new)
     return (new, cache, *ROB.split_by_robots(candidates, cache))
 
@@ -222,6 +226,18 @@ def _stage_robots(io: TableIO, it: int, cache: DataFrame | None, denied: DataFra
     return obs.get["n"]
 
 
+def _dead_letter(flog: DataFrame, it: int) -> DataFrame:
+    """The dead-letter delta of fetch_log rows: every attempted fetch
+    that did not end in a 200, with its attempt count and error. Repair
+    reads the committed log with this plan's schema."""
+    return flog.filter(~F.col("budget_denied") & (F.col("status") != 200)).select(
+        *[c for c in FR.FRONTIER_COLS if c != "attempts"],
+        F.col("n_attempts").alias("attempts"),
+        F.concat(F.lit("http_"), F.col("status")).alias("last_error"),
+        F.lit(it).alias("iteration"),
+    )
+
+
 _HINTS = ("seen_total", "pending_next", "pending_next_html", "pending_next_media")
 
 
@@ -238,8 +254,9 @@ def _commit(io: TableIO, it: int, tables: list[str], summary: dict, **extra) -> 
 
 def run_iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> dict:
     """Execute iteration ``it`` and commit. Returns summary counts."""
-    # driver-thread jobs (snapshot/log reads) between the stages
-    with _job_label(spark.sparkContext, f"it={it}/plan"):
+    # driver-thread jobs (snapshot/log reads) between the stages; the
+    # scope releases the iteration's caches whether or not it commits
+    with _job_label(spark.sparkContext, f"it={it}/plan"), cache_scope():
         return _iteration(spark, io, cfg, it)
 
 
@@ -273,7 +290,7 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     )
     dequeued = pending if skip_window else FR.dequeue(pending, pol.budget_html, pol.budget_img, n_salts)
 
-    # --- fetch (persist: feeds parse x4, metrics, seen delta) ---
+    # --- fetch (persist: feeds parse x4, seen delta) ---
     # sortWithinPartitions(page_kind) before persist: the in-memory cache
     # keeps per-batch column stats and prunes batches against scan
     # predicates (inMemoryColumnarStorage.partitionPruning). With rows
@@ -290,10 +307,9 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # just add near-empty task scheduling) — see fetch_batch's docstring.
     dp = spark.sparkContext.defaultParallelism
     fetch_parallelism = 4 * dp if pending_hint >= 20_000 else dp
-    fetched = (
+    fetched = scoped_persist(
         fetch_batch(dequeued, cfg.site, pol, media_parallelism=fetch_parallelism)
         .sortWithinPartitions("page_kind")
-        .persist()
     )
 
     # fetch_log: every non-body column + partition id + body length. It
@@ -306,9 +322,8 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # the first computes. The iteration's bookkeeping scalars
     # (fetched/ok/kinds-present, per-kind-group row counts for
     # throughput consumers) ride the same write as an Observation, and
-    # every later count (seen delta, dead letters, metrics, leftover)
-    # derives from the small staged parquet instead of re-scanning
-    # gigabytes of blobs.
+    # every later count (seen delta, dead letters, leftover) derives from
+    # the small staged parquet instead of re-scanning gigabytes of blobs.
     flog_plan = fetch_log_projection(fetched, it)
 
     def _fetch_log():
@@ -358,24 +373,23 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # replays it identically.
     html_present = bool(kinds_present.difference(P.MEDIA_KINDS))
     if html_present:
-        discovered_all = (
+        discovered_all = scoped_persist(
             _dedup_discovered(P.discover_links(ok.coalesce(dp)))
             .withColumn("url_hash", F.xxhash64("canon_url"))
             .withColumn("shard", shard_col(F.col("canon_url")))
             .withColumn("attempts", F.lit(0))
             .withColumn("discovered_at_iter", F.lit(it))
             .select(*FR.FRONTIER_COLS)
-            .persist()
         )
         # --- robots filter: only the robots-dependent stages (frontier,
         # robots_tables) wait on its ``discover`` count
         robots_new, robots_cache, discovered, robots_denied = _admit(io, cfg, it, discovered_all)
     else:
-        discovered_all = robots_new = robots_cache = None
+        robots_new = robots_cache = None
         discovered = robots_denied = spark.createDataFrame([], FR.FRONTIER_SCHEMA)
 
     # --- seen filter: committed seen + this iteration's attempts + pending
-    # (exactly-once enqueue, T7). seen_delta/dead/metrics/leftover all
+    # (exactly-once enqueue, T7). seen_delta/dead/leftover all
     # derive from the STAGED fetch_log parquet (body-free) — one scan of
     # the fat body cache writes fetch_log, and the bookkeeping plans then
     # read kilobyte-scale columns instead of re-scanning gigabytes.
@@ -417,37 +431,21 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     renditions = renditions_all.filter(F.col("rendition") != "ori").withColumn("iteration", F.lit(it))
     has_blobs = "image_blob" in kinds_present
 
-    metrics = (
-        flog.groupBy(
-            "partition_id", "host", F.col("page_kind").alias("kind"), "status",
-        )
-        .agg(
-            F.count("*").alias("pages"),
-            F.sum("body_len").alias("bytes"),
-            F.sum("n_attempts").alias("attempts"),
-        )
-        .withColumn("iteration", F.lit(it))
-    )
-
-    dead = attempted.filter(F.col("status") != 200).select(
-        *[c for c in FR.FRONTIER_COLS if c != "attempts"],
-        F.col("n_attempts").alias("attempts"),
-        F.concat(F.lit("http_"), F.col("status")).alias("last_error"),
-    )
-
-    # on compaction iterations captions is staged as the FULL union
-    # (superseding all earlier delta dirs at read time) via a normal
-    # Spark write — the fused pass skips it then — and the images caption
-    # join reads that same union
+    # the committed caption log, read with its staged schema (no
+    # inference job). On compaction iterations captions is staged as the
+    # FULL union (superseding all earlier delta dirs at read time) via a
+    # normal Spark write — the fused pass skips it then.
+    caps_schema = _staged_schema(P.CAPTION_SCHEMA)
+    caps_prev = io.read_log("captions", upto=it - 1, schema=caps_schema) if has_blobs or do_compact else None
     if do_compact:
         captions_plan = P.extract_captions(ok).withColumn("iteration", F.lit(it))
-        caps_prev = io.read_log("captions", upto=it - 1)
         caps_base = captions_plan if caps_prev is None else caps_prev.unionByName(captions_plan)
 
-    def _images(*_fused) -> int:
+    def _images() -> int:
         # flagship images table (input_hint shape): ori rendition +
-        # caption. Captions parse one depth earlier, so by blob-fetch time
-        # the caption is committed (or in this very iteration's delta).
+        # caption. A blob is discovered on its photo_detail page, whose
+        # caption the same iteration stages, and is fetched in a later
+        # iteration: by blob-fetch time its caption is committed.
         ori = renditions_all.filter(F.col("rendition") == "ori")
 
         def project(df: DataFrame) -> DataFrame:
@@ -471,13 +469,7 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
         # fetch_log) via a broadcast semi-join — the caption log itself
         # streams map-side, never shuffles, and the broadcast payload is
         # per-iteration-sized instead of growing with the whole crawl.
-        if do_compact:
-            caps = caps_base
-        else:
-            # this iteration's captions delta, as the fused pass staged it
-            caps = spark.read.parquet(io._tdir("captions", it))
-            committed = io.read_log("captions", upto=it - 1)
-            caps = caps if committed is None else committed.unionByName(caps)
+        caps = caps_prev if caps_prev is not None else spark.createDataFrame([], caps_schema)
         rm_this_it = flog.filter(F.col("page_kind") == "image_blob").select("rm").distinct()
         caps_needed = caps.select("rm", "caption").join(F.broadcast(rm_this_it), "rm", "left_semi")
         images = project(ori.join(F.broadcast(caps_needed), "rm", "left"))
@@ -491,10 +483,9 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # (plans/fused_staging.py); the rest are independent Spark jobs run
     # concurrently so their per-job scheduling overhead overlaps
     # (driver-side concurrency only). The fused pass is declared first:
-    # it is the one full scan of the fat body cache, and on iterations
-    # with image blobs the images caption join reads the captions delta
-    # it stages. discover comes next: frontier and robots_tables need the
-    # materialized robots cache, while the flog-derived stages overlap.
+    # it is the one full scan of the fat body cache. discover comes next:
+    # frontier and robots_tables need the materialized robots cache; no
+    # other stage waits (images joins only committed captions).
     # Stage outputs are invisible until the manifest commit, so the
     # schedule cannot change what is committed.
     stages = [
@@ -507,22 +498,17 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
         *([("captions", lambda: io.stage(caps_base, "captions", it), ())] if do_compact else []),
         ("video_files", lambda: _stage_if("video_blob", video_files, "video_files"), ()),
         # renditions is a pure projection of the hot cache (decode
-        # happened in the fetch pass), so it runs concurrently with the
-        # images chain: a media iteration's critical path is
-        # max(renditions, fused+images), not their sum
+        # happened in the fetch pass), so it runs concurrently with
+        # images: a media iteration's critical path is their max
         ("renditions", lambda: _stage_if("image_blob", renditions, "renditions"), ()),
-        ("dead_letter", lambda: io.stage(dead.withColumn("iteration", F.lit(it)), "dead_letter", it), ()),
-        ("metrics", lambda: io.stage(metrics, "metrics", it), ()),
+        ("dead_letter", lambda: io.stage(_dead_letter(flog, it), "dead_letter", it), ()),
         ("robots_tables", lambda n_new: _stage_robots(io, it, robots_cache, robots_denied, n_new),
          ("discover",)),
-        ("images", _images, ("thin_fused",) if has_blobs and not do_compact else ()),
+        ("images", _images, ()),
     ]
     res, stage_spans = _run_stages(spark.sparkContext, it, t0, stages)
     spans.update(stage_spans)
 
-    for df in (fetched, discovered_all, robots_new):
-        if df is not None:
-            df.unpersist()
     n_fetched = stats["n"]
     summary = {
         "fetched": n_fetched,
@@ -557,16 +543,15 @@ def _commit_seeds(spark: SparkSession, io: TableIO, cfg: CrawlConfig, seed_ids) 
     their hosts' robots rows once, and every table stages from that; the
     manifest carries the hints an iteration's does."""
     t0 = time.time()
-    seeds = init_frontier(spark, seed_ids, cfg).persist()
-    new, robots, allowed, denied = _admit(io, cfg, -1, seeds)
-    stages = [
-        ("discover", lambda: _discover(new), ()),
-        ("frontier", lambda _n: _stage_frontier(io, -1, allowed.repartition("host")), ("discover",)),
-        ("robots_tables", lambda n_new: _stage_robots(io, -1, robots, denied, n_new), ("discover",)),
-    ]
-    res, spans = _run_stages(spark.sparkContext, -1, t0, stages)
-    seeds.unpersist()
-    new.unpersist()
+    with cache_scope():
+        seeds = scoped_persist(init_frontier(spark, seed_ids, cfg))
+        new, robots, allowed, denied = _admit(io, cfg, -1, seeds)
+        stages = [
+            ("discover", lambda: _discover(new), ()),
+            ("frontier", lambda _n: _stage_frontier(io, -1, allowed.repartition("host")), ("discover",)),
+            ("robots_tables", lambda n_new: _stage_robots(io, -1, robots, denied, n_new), ("discover",)),
+        ]
+        res, spans = _run_stages(spark.sparkContext, -1, t0, stages)
     summary = {
         # every distinct seed is either admitted or robots-denied
         "init_seeds": res["frontier"]["pending_next"] + res["robots_tables"],
@@ -622,6 +607,20 @@ def run_crawl(
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return {"iterations": summaries, "total_wall_s": round(time.time() - t0, 3)}
+
+
+def metrics_view(io: TableIO) -> DataFrame:
+    """Per-iteration fetch metrics, the reference's per-epoch counters
+    (spiders.py:223-295): pages, body bytes and fetch attempts per
+    (iteration, partition, host, kind, status), grouped at read time
+    from the committed fetch_log, whose rows carry that lineage."""
+    return (
+        io.read_log("fetch_log")
+        .groupBy("iteration", "partition_id", "host", F.col("page_kind").alias("kind"), "status")
+        .agg(F.count("*").alias("pages"), F.sum("body_len").alias("bytes"),
+             F.sum("n_attempts").alias("attempts"))
+        .select("partition_id", "host", "kind", "status", "pages", "bytes", "attempts", "iteration")
+    )
 
 
 def renditions_view(io: TableIO) -> DataFrame:

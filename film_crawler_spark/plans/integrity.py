@@ -38,7 +38,6 @@ EXPECTED_KEYS = {
     "renditions": ["rm", "rendition", "bytes", "w", "h", "fmt", "phash"],
     "images": ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"],
     "dead_letter": ["canon_url", "attempts", "last_error"],
-    "metrics": ["iteration", "host", "kind", "status", "pages", "bytes"],
     "fetch_log": ["canon_url", "status", "page_kind", "iteration"],
     "videos": ["vi", "tt", "nm", "mp4_url"],
     "video_files": ["vi", "tt", "nm", "bytes", "n_bytes"],

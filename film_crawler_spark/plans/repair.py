@@ -31,16 +31,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from film_crawler_spark.operators import frontier as FR
+from film_crawler_spark.operators.fetch import empty_fetch_log
 from film_crawler_spark.plans.crawl_loop import (
-    CrawlConfig, _commit, _job_label, _run_stages, _stage_frontier, run_crawl,
+    CrawlConfig, _commit, _dead_letter, _job_label, _run_stages, _stage_frontier, run_crawl,
 )
 from film_crawler_spark.sources.tableio import TableIO
 
 
 def build_repair_frontier(io: TableIO, cfg: CrawlConfig, next_it: int) -> DataFrame | None:
     """Frontier rows for every dead-lettered URL that never later
-    succeeded. None when there is nothing to repair."""
-    dead = io.read_log("dead_letter")
+    succeeded. None when there is nothing to repair. Both logs are read
+    with the schemas of the plans that stage them (no inference job)."""
+    flog = empty_fetch_log(io.spark)
+    dead = io.read_log("dead_letter", schema=_dead_letter(flog, 0).schema)
     if dead is None:
         return None
     # latest attempt per canon_url (a URL can die in several iterations);
@@ -50,7 +53,7 @@ def build_repair_frontier(io: TableIO, cfg: CrawlConfig, next_it: int) -> DataFr
     )
     latest = dead.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     # exclude URLs that eventually fetched OK
-    succeeded = io.read_log("fetch_log").filter(F.col("status") == 200).select("canon_url")
+    succeeded = io.read_log("fetch_log", schema=flog.schema).filter(F.col("status") == 200).select("canon_url")
     todo = latest.join(succeeded, "canon_url", "left_anti")
     return todo.withColumn("discovered_at_iter", F.lit(next_it)).select(*FR.FRONTIER_COLS)
 
@@ -69,7 +72,10 @@ def run_repair(spark: SparkSession, cfg: CrawlConfig, progress: bool = False) ->
         repair_rows = build_repair_frontier(io, cfg, next_it)
         if repair_rows is None:
             return {"iterations": [], "total_wall_s": 0.0}
-        pending = io.read_snapshot("frontier", upto=last)
+        # the schema an iteration stages the frontier with (FR.remaining
+        # puts its keys first): no inference job, same column order
+        empty = spark.createDataFrame([], FR.FRONTIER_SCHEMA)
+        pending = io.read_snapshot("frontier", upto=last, schema=FR.remaining(empty, empty).schema)
     merged = pending.unionByName(repair_rows) if pending is not None else repair_rows
     # the crawl loop's counted frontier stage: the row count rides the write
     res, spans = _run_stages(spark.sparkContext, next_it, t0, [

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from film_crawler_spark.operators import frontier as FR
 from film_crawler_spark.operators import parse as P
-from film_crawler_spark.operators.fetch import fetch_drain, fetch_log_projection
+from film_crawler_spark.operators.fetch import empty_fetch_log, fetch_drain, fetch_log_projection
 from film_crawler_spark.plans.crawl_loop import CrawlConfig, _commit, _job_label, _run_stages
 from film_crawler_spark.sources.tableio import TableIO
 
@@ -69,7 +69,7 @@ def run_supplement(
 
     with _job_label(spark.sparkContext, f"it={it}/plan"):
         targets = (
-            io.read_log("fetch_log")
+            io.read_log("fetch_log", schema=empty_fetch_log(spark).schema)
             .filter(
                 F.col("page_kind").isin(*kinds)
                 & (F.col("status") == 200)

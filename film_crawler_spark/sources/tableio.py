@@ -4,7 +4,7 @@ The reference checkpoints with a text file holding the last finished
 epoch plus ``.bak`` copies (reference spiders.py:215-218, 278-281) and
 appends CSVs non-atomically. The engine needs a stronger contract
 (north_rule): each crawl iteration commits *several* tables (frontier
-snapshot, seen delta, results, images, metrics, dead letters) together
+snapshot, seen delta, results, images, fetch log, dead letters) together
 or not at all, and resume replays from the last committed iteration.
 
 With an Iceberg catalog this is a multi-table transaction / tagged
@@ -162,7 +162,7 @@ class TableIO:
 
     def read_log(self, table: str, upto: int | None = None, schema=None) -> DataFrame | None:
         """Union of all committed deltas (log-structured tables: seen,
-        images, metrics, dead_letter...). None if nothing committed.
+        images, fetch_log, dead_letter...). None if nothing committed.
         A known ``schema`` skips parquet schema inference (a Spark job)."""
         dirs = self._committed_dirs(table, upto)
         if not dirs:

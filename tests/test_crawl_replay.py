@@ -19,7 +19,8 @@ from film_crawler_spark.functions.images import decode_image, psnr
 from film_crawler_spark.operators import frontier as FR
 from film_crawler_spark.operators import robots as ROB
 from film_crawler_spark.operators.politeness import PolitenessConfig
-from film_crawler_spark.plans.crawl_loop import CrawlConfig, run_crawl
+from film_crawler_spark.operators.fetch import empty_fetch_log
+from film_crawler_spark.plans.crawl_loop import CrawlConfig, _dead_letter, metrics_view, run_crawl
 from film_crawler_spark.simulator import simulate
 from film_crawler_spark.sources.synthetic_site import SiteConfig, SyntheticSite, make_seed_ids
 from film_crawler_spark.sources.tableio import TableIO
@@ -78,6 +79,13 @@ def test_caption_equality_and_image_set(crawled, sim):
     assert set(engine_caps) == set(sim_with_ori)
     for rm, v in sim_with_ori.items():
         assert engine_caps[rm] == v["caption"], rm
+    # the invariant the images caption join relies on: every image's
+    # caption was committed in an earlier iteration than the image
+    cap_its: dict = {}
+    for r in crawled.read_log("captions").select("rm", "iteration").collect():
+        cap_its.setdefault(r["rm"], []).append(r["iteration"])
+    for r in crawled.read_log("images").select("image_id", "iteration").collect():
+        assert cap_its.get(r["image_id"]) and max(cap_its[r["image_id"]]) < r["iteration"], r
 
 
 def test_person_images_in_flagship_table(crawled, sim):
@@ -192,9 +200,23 @@ def test_credits_match_ground_truth(crawled, sim):
 
 
 def test_metrics_lineage_present(crawled):
-    m = crawled.read_log("metrics")
-    assert {"iteration", "partition_id", "host", "kind", "status", "pages", "bytes"} <= set(m.columns)
-    assert m.count() > 0
+    # per-iteration metrics are a view over fetch_log: for every crawl
+    # iteration, pages/bytes/attempts per (partition, host, kind, status)
+    m = metrics_view(crawled)
+    assert m.columns == ["partition_id", "host", "kind", "status", "pages", "bytes", "attempts", "iteration"]
+
+    def add(total, v):  # SQL sum: nulls skipped, null when all are
+        return total if v is None else v if total is None else total + v
+
+    want: dict = {}
+    for r in crawled.read_log("fetch_log").collect():
+        key = (r["iteration"], r["partition_id"], r["host"], r["page_kind"], r["status"])
+        pages, nbytes, attempts = want.get(key, (0, None, None))
+        want[key] = (pages + 1, add(nbytes, r["body_len"]), add(attempts, r["n_attempts"]))
+    got = {(r["iteration"], r["partition_id"], r["host"], r["kind"], r["status"]):
+           (r["pages"], r["bytes"], r["attempts"]) for r in m.collect()}
+    assert got == want
+    assert {k[0] for k in got} == {i for i in crawled.committed_iterations() if i >= 0}
     # every commit carries its iteration trace: per-stage [start_s, end_s]
     # and the adaptive choices taken
     for i in crawled.committed_iterations():
@@ -222,9 +244,12 @@ def test_metrics_lineage_present(crawled):
         return {f.name: f for f in df.schema.fields}
 
     seen_schema = crawled.read_log("fetch_log").select("canon_url", "url_hash", "shard", "host", "status").schema
+    flog = empty_fetch_log(crawled.spark)
     for read, table, schema in [(crawled.read_snapshot, "frontier", FR.FRONTIER_SCHEMA),
                                 (crawled.read_snapshot, "robots", ROB.ROBOTS_SCHEMA),
-                                (crawled.read_log, "seen", seen_schema)]:
+                                (crawled.read_log, "seen", seen_schema),
+                                (crawled.read_log, "fetch_log", flog.schema),
+                                (crawled.read_log, "dead_letter", _dead_letter(flog, 0).schema)]:
         assert fields(read(table, schema=schema)) == fields(read(table)), table
 
 
@@ -406,18 +431,19 @@ def _norm_val(v):
 
 
 def _table_counter(io, table, supp_it=None, time_remap=None):
-    """Row multiset of a sink table; when supp_it is given, the
-    supplement's own fetch_log lineage rows are excluded and every
+    """Row multiset of a sink table or of ``metrics`` (a view over
+    fetch_log); when supp_it is given, the supplement's own fetch_log
+    lineage rows (and their metrics) are excluded and every
     iteration-derived value > supp_it is shifted back by 1 (incl. the
     ratings fetched_at crawl-clock timestamps via time_remap)."""
-    df = io.read_log(table)
+    df = metrics_view(io) if table == "metrics" else io.read_log(table)
     if df is None:
         return None
     names = df.columns
     out = Counter()
     for r in df.collect():
         d = r.asDict(recursive=True)
-        if supp_it is not None and table == "fetch_log" and d.get("iteration") == supp_it:
+        if supp_it is not None and table in ("fetch_log", "metrics") and d.get("iteration") == supp_it:
             continue
         vals = []
         for c in names:
@@ -490,7 +516,7 @@ def test_supplement_interleaved_resume_replays_identically(spark, tmp_path_facto
     }
 
     assert _fetch_order(io_a, supp_it) == _fetch_order(io_b)
-    for t in RESULT_TABLES:
+    for t in [*RESULT_TABLES, "metrics"]:
         a = _table_counter(io_a, t, supp_it=supp_it, time_remap=time_remap)
         b = _table_counter(io_b, t)
         if a is None and b is None:

@@ -113,3 +113,25 @@ def test_second_writer_cannot_overwrite_a_commit(spark, tmp_path):
     assert TableIO(spark, wh).manifest(0)["summary"] == {"writer": 1}
     # no temp file is left behind by either writer
     assert os.listdir(os.path.join(wh, "_commits")) == [os.path.basename(first._commit_path(0))]
+
+
+def test_failed_iteration_releases_its_caches(spark, tmp_path, monkeypatch):
+    """A stage that raises fails the iteration before its commit, and the
+    iteration's persisted frames (fetched bodies, discoveries, new robots
+    rows) are released anyway."""
+    from film_crawler_spark.plans import crawl_loop
+
+    def broken_fused_stage(*_args, **_kwargs):
+        raise RuntimeError("injected fused-stage failure")
+
+    monkeypatch.setattr(crawl_loop, "fused_stage", broken_fused_stage)
+    # earlier tests on the shared session may have left caches behind
+    spark.catalog.clearCache()
+    wh = str(tmp_path / "w")
+    cfg = CrawlConfig(warehouse=wh, site=SITE, politeness=POL, max_iterations=1)
+    with pytest.raises(RuntimeError, match="injected fused-stage failure"):
+        run_crawl(spark, make_seed_ids(2), cfg)
+    io = TableIO(spark, wh)
+    assert io.last_committed() == -1  # the seed commit, and no it=0 manifest
+    assert not os.path.exists(io._commit_path(0))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

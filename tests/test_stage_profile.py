@@ -49,11 +49,14 @@ def test_stage_profile_aggregates_event_log(tmp_path):
     assert rows == sorted(rows, key=lambda r: r["run_ms"], reverse=True)
     assert sum(r["shuffle_write_mb"] for r in rows) >= 0.0  # metrics fields present and numeric
     # every stage is attributed to the runner stage that launched its job
-    labels = by_label(rows)
-    assert {r["label"] for r in labels} == {"it=0/group", "it=0/scan"}
-    group = next(r for r in labels if r["label"] == "it=0/group")
-    assert group["stages"] >= 2
-    assert sum(r["run_ms"] for r in labels) == sum(r["run_ms"] for r in rows)
+    labels = {r["label"]: r for r in by_label(rows, res["jobs"])}
+    assert set(labels) == {"it=0/group", "it=0/scan"}
+    assert labels["it=0/group"]["stages"] >= 2
+    # and counts each label's Spark jobs: under AQE every shuffle map
+    # stage runs as a job of its own, so the groupBy + count runs 3 jobs
+    # (two map stages, the result) and the plain count 2
+    assert {k: r["jobs"] for k, r in labels.items()} == {"it=0/group": 3, "it=0/scan": 2}
+    assert sum(r["run_ms"] for r in labels.values()) == sum(r["run_ms"] for r in rows)
     assert res["cores"] == 2
     idle = idle_windows(res["tasks"], res["jobs"], res["cores"])
     assert idle["wall_s"] > 0

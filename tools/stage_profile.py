@@ -3,9 +3,9 @@ crawl stage and per Spark stage, and when cores sit idle.
 
 Three reports from one pass over the logs:
 
-* executor time per job label — the crawl loop labels every Spark job
-  ``it=<i>/<stage>`` (``spark.job.description``), so this is the
-  per-iteration, per-stage cost of a crawl;
+* Spark jobs and executor time per job label — the crawl loop labels
+  every Spark job ``it=<i>/<stage>`` (``spark.job.description``), so
+  this is the per-iteration, per-stage cost of a crawl;
 * the top Spark stages by executor time — run/CPU time, GC, shuffle
   read/write, input bytes, peak task time (the analysis that found the
   round-1/2 performance bugs: cache convoys, Python-UDF recompute across
@@ -146,10 +146,13 @@ def scan(ev_dir: str) -> dict:
     return {"stages": rows, "jobs": jobs, "tasks": tasks, "cores": cores}
 
 
-def by_label(rows: list[dict]) -> list[dict]:
-    """Executor time per job label (``it=<i>/<stage>`` for crawl jobs),
-    sorted by run time descending."""
-    out: dict[str, dict] = defaultdict(lambda: {"stages": 0, "tasks": 0, "run_ms": 0, "cpu_ms": 0})
+def by_label(rows: list[dict], jobs: dict) -> list[dict]:
+    """Spark jobs and executor time per job label (``it=<i>/<stage>`` for
+    crawl jobs), from ``scan``'s stage rows and jobs, sorted by run time
+    descending."""
+    out: dict[str, dict] = defaultdict(lambda: {"jobs": 0, "stages": 0, "tasks": 0, "run_ms": 0, "cpu_ms": 0})
+    for _submit, _end, label in jobs.values():
+        out[label]["jobs"] += 1
     for r in rows:
         agg = out[r["label"]]
         agg["stages"] += 1
@@ -199,10 +202,10 @@ def main() -> None:
     cores = int(sys.argv[3]) if len(sys.argv) > 3 else res["cores"] or 8
     total = sum(r["run_ms"] for r in rows)
     print(f"{len(rows)} stages, total executor run time {total/1000:.1f}s\n")
-    print(f"{'run_s':>8} {'cpu_s':>8} {'stages':>6} {'tasks':>6}  label")
-    for r in by_label(rows):
-        print(f"{r['run_ms']/1000:>8.2f} {r['cpu_ms']/1000:>8.2f} {r['stages']:>6} {r['tasks']:>6}  "
-              f"{r['label'] or '(unlabelled)'}")
+    print(f"{'run_s':>8} {'cpu_s':>8} {'jobs':>5} {'stages':>6} {'tasks':>6}  label")
+    for r in by_label(rows, res["jobs"]):
+        print(f"{r['run_ms']/1000:>8.2f} {r['cpu_ms']/1000:>8.2f} {r['jobs']:>5} {r['stages']:>6} "
+              f"{r['tasks']:>6}  {r['label'] or '(unlabelled)'}")
     print(
         f"\n{'stage':>8} {'tasks':>6} {'fail':>4} {'run_s':>8} {'cpu_s':>8} {'gc_s':>6} "
         f"{'in_MB':>8} {'shR_MB':>8} {'shW_MB':>8} {'spill':>6} {'maxT_s':>7}  label / name"
