@@ -16,7 +16,7 @@ functions   column-level primitives: URL canonicalization/hashing, image
 sources     seed scans, the deterministic synthetic site resolver (the
             sandbox stand-in for HTTP fetch), and TableIO (Parquet +
             atomic manifest commits).
-operators   frontier dequeue, token-bucket politeness, robots filter,
+operators   frontier dequeue, per-host politeness pacing, robots filter,
             fetch/parse stages, dedup family, similarity search.
 plans       the iterative crawl-loop driver (its seen filter is one exact
             anti-join) and checkpoint/resume.

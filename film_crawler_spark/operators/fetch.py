@@ -10,7 +10,9 @@ dead-letter rows instead of a ``remain.csv`` (spiders.py:2995-2998).
 The resolver is pluggable: in this sandbox it is the deterministic
 SyntheticSite (no network); on a real deployment it would be an
 httpx/aiohttp client with the same (url, attempt) -> (status, bytes)
-contract — the politeness bucket and retry policy do not change.
+contract — the per-host pacing and retry policy do not change. The
+per-host count budget is not checked here: the dequeue that built the
+batch already capped it, so every row this stage receives is fetched.
 """
 
 from __future__ import annotations
@@ -56,13 +58,14 @@ def fetch_batch(
     media_parallelism: int | None = None,
 ) -> DataFrame:
     """Fetch every dequeued row. Returns frontier columns + status/kind/
-    body/n_attempts/budget_denied.
+    body/n_attempts/budget_denied (always false: the committed fetch_log
+    schema keeps the column, but the dequeue is the only budget check).
 
     Partitioning follows the reference's two-tier politeness model:
 
     * PAGE fetches sleep per request (reference spiders.py:136), so one
       host's pages go to ONE task, sorted (priority, seq) — per-host
-      serialization makes the inter-request delay and budget exact. Not
+      serialization makes the inter-request delay exact. Not
       a skew hazard: the dequeue already capped each host at its budget,
       so the task is bounded by the budget, not by pending skew.
     * MEDIA fetches are unthrottled in the reference (no sleep in the
@@ -77,13 +80,12 @@ def fetch_batch(
     def _make_runner(throttle: bool, retry_cap: int):
         def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             site = SyntheticSite(site_cfg)
-            bucket = TokenBucket(pol.budget_html, pol.delay_s) if throttle else None
+            bucket = TokenBucket(pol.delay_s) if throttle else None
             for pdf in batches:
                 rows = []
                 for r in pdf.itertuples(index=False):
-                    if bucket is not None and not bucket.try_acquire(r.host):
-                        rows.append((*r, 0, "denied", b"", 0, True, None, None, None, None, None))
-                        continue
+                    if bucket is not None:
+                        bucket.pace(r.host)
                     attempt = int(r.attempts) + 1
                     res = site.fetch(r.url, attempt)
                     while res.status == 500 and attempt < retry_cap:
@@ -128,7 +130,7 @@ def fetch_batch(
             .mapInPandas(_make_runner(True, pol.retry_cap_500), schema)
         )
     else:
-        # count-budget-only mode: the dequeue already enforced the exact
+        # unpaced mode: the dequeue already enforced the exact
         # per-host budget, and with no delay there is nothing to
         # serialize — spread pages like media so the stage scales
         html = (
@@ -152,45 +154,26 @@ def fetch_batch(
 
 def fetch_drain(frontier: DataFrame, cfg: SiteConfig, pol: PolitenessConfig) -> DataFrame:
     """Budget-bounded fetch passes until the frontier drains; returns
-    every attempted row (the union across passes).
+    every fetched row (the union across passes).
 
     For one-shot jobs (liveness probe, seed generators) that have no
     crawl-iteration loop: each pass DEQUEUES at most (budget_html,
-    budget_img) rows per host — the same structural politeness
-    enforcement the crawl loop applies before fetching (the fetch-side
-    token bucket alone only covers the delay_s > 0 path) — fetches the
-    batch, and carries the remainder plus any bucket-denied rows into
-    the next pass. One pass over an unbounded input would both violate
-    the per-host budget and (when the bucket does deny) silently drop
-    the excess. Each pass progresses >= 1 row per pending host, so the
-    loop terminates; localCheckpoint truncates lineage so pass i+1
-    never re-runs pass i's fetches. The crawl loop does NOT use this —
-    its iterations ARE the drain (T7 re-enqueue)."""
+    budget_img) rows per host — the same politeness enforcement the
+    crawl loop applies before fetching — fetches the batch, and carries
+    the remainder into the next pass. One pass over an unbounded input
+    would violate the per-host budget (and, on a wide cluster, let one
+    host take every concurrent request). Each pass fetches >= 1 row per
+    pending host, so the loop terminates; localCheckpoint truncates
+    lineage so pass i+1 never re-runs pass i's fetches. The crawl loop
+    does NOT use this — its iterations ARE the drain (T7 re-enqueue)."""
     from film_crawler_spark.operators.frontier import dequeue, remaining
 
-    # Drain until pending is empty. Bucket-denied rows are NOT attempted,
-    # so remaining(pending, attempted) keeps them for the next pass
-    # automatically — unioning them back (the old code) double-enqueued
-    # them. A fixed pass bound (ceil(max per-host pending / budget), the
-    # previous form) under-budgets whenever the token bucket denies —
-    # denied rows then survived every pass and were silently dropped from
-    # the result. Termination: each pass must attempt >= 1 row (dequeue
-    # yields >= 1 per pending host and the bucket refills between passes);
-    # a zero-progress pass means the bucket and dequeue budgets have
-    # diverged irreconcilably, which is a configuration bug — raise loudly
-    # rather than spin or drop rows.
     pending, parts = frontier, []
     while not pending.isEmpty():
         batch = dequeue(pending, pol.budget_html, pol.budget_img, n_salts=1)
         fetched = fetch_batch(batch, cfg, pol).localCheckpoint(eager=True)
-        attempted = fetched.filter(~F.col("budget_denied"))
-        if attempted.isEmpty():
-            raise RuntimeError(
-                "fetch_drain made no progress: every dequeued row was "
-                "budget-denied (token-bucket capacity < dequeue budget?)"
-            )
-        parts.append(attempted)
-        pending = remaining(pending, attempted).localCheckpoint(eager=True)
+        parts.append(fetched)
+        pending = remaining(pending, fetched).localCheckpoint(eager=True)
     if not parts:
         return fetch_batch(frontier.limit(0), cfg, pol)
     out = parts[0]

@@ -1,23 +1,22 @@
-"""Per-host token-bucket politeness, enforced inside executor partitions.
+"""Per-host politeness: a count budget per iteration, plus per-host
+request pacing inside executor partitions.
 
 The reference sleeps 2 s before *every* HTML request on every thread
 (reference spiders.py:78, 136) and leaves media downloads unthrottled
-(spiders.py:2981-2998 — no sleep). The engine generalizes both into a
-per-host token bucket that lives inside the fetch ``mapInPandas`` task:
+(spiders.py:2981-2998 — no sleep). The engine splits that contract in
+two:
 
-* the *count* budget (requests/host/iteration) is enforced
-  STRUCTURALLY, before any fetch runs: the frontier dequeue caps each
-  (host, kind) at its budget per iteration (salting happens inside the
+* the *count* budget (requests/host/iteration) is enforced in ONE
+  place, before any fetch runs: the frontier dequeue caps each
+  (host, kind-group) at its budget per iteration (salting happens inside the
   dequeue's two-phase window, so the cap is exact under skew), and
   one-shot jobs without an iteration loop get the same cap from
-  ``fetch_drain``'s per-pass dequeue. The bucket re-checks the count
-  only on the throttled path below — belt-and-braces, not the primary
-  enforcement;
-* the *rate* (min delay between requests to one host) is enforced by
-  the bucket — when delay_s > 0 the fetch stage routes ALL of one
+  ``fetch_drain``'s per-pass dequeue. Every dequeued row is fetched;
+* the *rate* (min delay between requests to one host) is kept by the
+  ``TokenBucket`` — when delay_s > 0 the fetch stage routes ALL of one
   host's page requests into a single task (sorted by priority, seq), so
   the bucket is a plain in-process structure, no cross-executor
-  coordination and no budget splitting.
+  coordination. It only paces; it never refuses a request.
 
 The budget is deliberately independent of cluster parallelism: scaling
 from N to 4N executors must not multiply pressure on a host (BASELINE.md
@@ -43,24 +42,17 @@ class PolitenessConfig:
 
 @dataclass
 class TokenBucket:
-    """One fetch task's per-host state. Not thread-safe — a Spark task is
-    single-threaded by design."""
+    """One fetch task's per-host pacing state. Not thread-safe — a Spark
+    task is single-threaded by design."""
 
-    budget: int
     delay_s: float = 0.0
-    used: dict = field(default_factory=dict)
     last_at: dict = field(default_factory=dict)
 
-    def try_acquire(self, host: str, now: float | None = None) -> bool:
-        """Consume one token for host; False when the budget is spent."""
-        if self.used.get(host, 0) >= self.budget:
-            return False
-        if self.delay_s > 0:
-            t = time.monotonic() if now is None else now
-            wait = self.last_at.get(host, -1e18) + self.delay_s - t
-            if wait > 0:
-                time.sleep(wait)
-                t += wait
-            self.last_at[host] = t
-        self.used[host] = self.used.get(host, 0) + 1
-        return True
+    def pace(self, host: str) -> None:
+        """Sleep until ``delay_s`` has passed since host's last request."""
+        t = time.monotonic()
+        wait = self.last_at.get(host, -1e18) + self.delay_s - t
+        if wait > 0:
+            time.sleep(wait)
+            t += wait
+        self.last_at[host] = t

@@ -5,7 +5,7 @@ spiders.py:208-295: seed sort/reverse, epoch slicing, thread-pool fan
 out, checkpoint + metrics commit per epoch — see SURVEY.md §3.1):
 
     frontier(it) --[per-host top-B dequeue, salted two-phase]-->
-    fetch (mapInPandas; token bucket; inline 500-retries) -->
+    fetch (mapInPandas; per-host pacing; inline 500-retries) -->
     parse (discover links / titles / captions / decode blobs) -->
     seen-filter (one exact anti-join against seen + pending) -->
     stage {frontier(it+1), seen Δ, titles Δ, captions Δ,
@@ -79,19 +79,20 @@ RESULT_TABLES = [
     "events_base", "event_awards", "companies_base", "company_films",
 ]
 
+# the salted dequeue's salt count, and the adaptive threshold below which
+# its extra shuffle costs more than it saves (results are identical
+# either way — a physical choice)
+N_SALTS = 8
+SALT_MIN_PENDING = 200_000
+
 
 @dataclass
 class CrawlConfig:
     warehouse: str
     site: SiteConfig = field(default_factory=SiteConfig)
     politeness: PolitenessConfig = field(default_factory=PolitenessConfig)
-    n_salts: int = 8
     reverse_seeds: bool = True  # reference main.py:23 is_reverse=True
     max_iterations: int = 64
-    # adaptive threshold: below this pending size the extra shuffle of
-    # the salted dequeue phase costs more than it saves (results are
-    # identical either way — a physical choice)
-    salt_min_pending: int = 200_000
     # every K iterations the hot log tables (seen; captions) are staged
     # as a full compacted base instead of a delta, so the per-iteration
     # re-read unions O(K) directories instead of O(crawl age). Purely a
@@ -227,10 +228,10 @@ def _stage_robots(io: TableIO, it: int, cache: DataFrame | None, denied: DataFra
 
 
 def _dead_letter(flog: DataFrame, it: int) -> DataFrame:
-    """The dead-letter delta of fetch_log rows: every attempted fetch
-    that did not end in a 200, with its attempt count and error. Repair
-    reads the committed log with this plan's schema."""
-    return flog.filter(~F.col("budget_denied") & (F.col("status") != 200)).select(
+    """The dead-letter delta of fetch_log rows: every fetch that did not
+    end in a 200, with its attempt count and error. Repair reads the
+    committed log with this plan's schema."""
+    return flog.filter(F.col("status") != 200).select(
         *[c for c in FR.FRONTIER_COLS if c != "attempts"],
         F.col("n_attempts").alias("attempts"),
         F.concat(F.lit("http_"), F.col("status")).alias("last_error"),
@@ -274,16 +275,16 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     pending_hint = prev.get("pending_next", 0)
 
     # --- dequeue: per-kind budgets (reference throttles pages, not media) ---
-    # The per-(host, kind-group) top-B window is what ENFORCES the
-    # politeness budget in count-budget mode — but when the previous
-    # commit proves the budget cannot bind (TOTAL pending per kind-group
-    # <= that group's per-host budget, an upper bound on any one host's
-    # share), the window provably selects every row, so the full
-    # shuffle+sort of the pending set is skipped and the batch is the
-    # whole frontier. Upper-bound reasoning keeps politeness exact, and
-    # the decision derives from committed manifest counts only, so
-    # resume replays it identically.
-    n_salts = cfg.n_salts if pending_hint >= cfg.salt_min_pending else 1
+    # The per-(host, kind-group) top-B window is the one place the
+    # politeness budget is enforced (the fetch only paces) — but when
+    # the previous commit proves the budget cannot bind (TOTAL pending
+    # per kind-group <= that group's per-host budget, an upper bound on
+    # any one host's share), the window provably selects every row, so
+    # the full shuffle+sort of the pending set is skipped and the batch
+    # is the whole frontier. Upper-bound reasoning keeps politeness
+    # exact, and the decision derives from committed manifest counts
+    # only, so resume replays it identically.
+    n_salts = N_SALTS if pending_hint >= SALT_MIN_PENDING else 1
     skip_window = (
         prev.get("pending_next_html", float("inf")) <= pol.budget_html
         and prev.get("pending_next_media", float("inf")) <= pol.budget_img
@@ -347,14 +348,13 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # fetched_at: iteration-derived synthetic timestamp (constant literal,
     # no per-row cost) — the ratings parser emits it as the reference's
     # re-crawlable time_stamp column (spiders.py:5037)
-    ok = fetched.filter((~F.col("budget_denied")) & (F.col("status") == 200)).withColumn(
+    ok = fetched.filter(F.col("status") == 200).withColumn(
         "fetched_at", F.lit(P.synthetic_fetch_time(it))
     )
 
     # read back with the writer's schema: no schema-inference job
     flog = spark.read.schema(flog_plan.schema).parquet(io._tdir("fetch_log", it))
     kinds_present = set(stats["kinds"])
-    attempted = flog.filter(~F.col("budget_denied"))
 
     # --- parse + discover (persisted: robots staging, robots_denied and
     # the frontier write all consume it — without the persist the
@@ -393,7 +393,7 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # derive from the STAGED fetch_log parquet (body-free) — one scan of
     # the fat body cache writes fetch_log, and the bookkeeping plans then
     # read kilobyte-scale columns instead of re-scanning gigabytes.
-    seen_delta = attempted.select("canon_url", "url_hash", "shard", "host", "status")
+    seen_delta = flog.select("canon_url", "url_hash", "shard", "host", "status")
     seen_exact = io.read_log("seen", upto=it - 1, schema=seen_delta.schema)
     all_seen = seen_delta if seen_exact is None else seen_exact.unionByName(seen_delta)
     # periodic log compaction (see CrawlConfig.compact_every)
@@ -404,9 +404,7 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # pending rows
     exclusions = all_seen.select("canon_url").unionByName(leftover.select("canon_url"))
     new_rows = discovered.join(exclusions, "canon_url", "left_anti").select(*FR.FRONTIER_COLS)
-
-    denied_rows = flog.filter(F.col("budget_denied")).select(*FR.FRONTIER_COLS)
-    next_pending = leftover.unionByName(denied_rows).unionByName(new_rows)
+    next_pending = leftover.unionByName(new_rows)
 
     # --- results ---
     # kind-aware staging for the blob-carrying tables: an extract whose

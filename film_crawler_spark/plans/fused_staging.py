@@ -66,7 +66,7 @@ def stage_thin_tables(
     iteration ``it``. Returns per-table staged row counts.
 
     ``ok`` must carry the frontier columns + ``kind`` + ``body`` (the
-    crawl loop's 200-status non-denied slice of the fetched cache).
+    crawl loop's 200-status slice of the fetched cache).
     ``exclude`` skips tables the caller stages another way (captions on
     compaction iterations, where the FULL union is staged as a base).
     ``kinds_present`` (when the caller already knows the iteration's

@@ -57,10 +57,10 @@ def probe_404(
         )
     )
     dead_id = F.coalesce("tt", "nm").alias("id")
-    # fetch_drain, not one fetch_batch: politeness budgets cap fetches
-    # per host per pass, and a single pass over an id list longer than
-    # budget_html would silently skip (= report alive) everything past
-    # the cap. The drain loops until every id was actually probed.
+    # fetch_drain, not one fetch_batch: the per-host politeness budget
+    # caps each pass's dequeue, so one pass over an id list longer than
+    # budget_html would break the budget. The drain dequeues and fetches
+    # capped passes until every id was probed.
     fetched = fetch_drain(frontier, cfg, pol)
     return (
         fetched.filter(F.col("status") == 404)

@@ -45,6 +45,7 @@ from film_crawler_spark.operators import frontier as FR
 from film_crawler_spark.operators import parse as P
 from film_crawler_spark.operators.fetch import empty_fetch_log, fetch_drain, fetch_log_projection
 from film_crawler_spark.plans.crawl_loop import CrawlConfig, _commit, _job_label, _run_stages
+from film_crawler_spark.plans.fused_staging import _staged_schema
 from film_crawler_spark.sources.tableio import TableIO
 
 
@@ -70,11 +71,7 @@ def run_supplement(
     with _job_label(spark.sparkContext, f"it={it}/plan"):
         targets = (
             io.read_log("fetch_log", schema=empty_fetch_log(spark).schema)
-            .filter(
-                F.col("page_kind").isin(*kinds)
-                & (F.col("status") == 200)
-                & (~F.col("budget_denied"))
-            )
+            .filter(F.col("page_kind").isin(*kinds) & (F.col("status") == 200))
             .select(*FR.FRONTIER_COLS)
             .withColumn("attempts", F.lit(0))
             .dropDuplicates(["canon_url"])
@@ -90,7 +87,7 @@ def run_supplement(
         new: dict[str, DataFrame] = {}
         if "reviews" in kinds:
             parsed = P.extract_reviews(ok)
-            existing = io.read_log("reviews")
+            existing = io.read_log("reviews", schema=_staged_schema(P.REVIEW_SCHEMA))
             new["reviews"] = (
                 parsed
                 if existing is None
@@ -102,7 +99,7 @@ def run_supplement(
             )
         if "news" in kinds:
             parsed = P.extract_news(ok).withColumn("_owner", F.coalesce("tt", "nm"))
-            existing = io.read_log("news")
+            existing = io.read_log("news", schema=_staged_schema(P.NEWS_SCHEMA))
             if existing is not None:
                 # owner is coalesced on BOTH sides: tt/nm are each null on
                 # the other entity's rows, and a plain multi-column

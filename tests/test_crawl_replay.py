@@ -59,6 +59,14 @@ def test_exact_fetch_order_per_host(crawled, sim):
         assert engine_order[host] == sim.fetch_order[host], f"order mismatch on {host}"
 
 
+def test_budget_caps_every_iteration(crawled, budget_peaks):
+    """The dequeue is the only budget check: no host fetches more pages
+    or media in one iteration than its per-iteration budget, and the
+    page budget binds in this world."""
+    pages, media = budget_peaks(crawled)
+    assert pages == POL.budget_html and media <= POL.budget_img, (pages, media)
+
+
 def test_identical_seen_set(crawled, sim):
     engine_seen = {r["canon_url"] for r in crawled.read_log("seen").select("canon_url").collect()}
     assert engine_seen == sim.seen

@@ -6,13 +6,14 @@ small-scale plan.
 """
 
 from film_crawler_spark.operators.politeness import PolitenessConfig
+from film_crawler_spark.plans import crawl_loop
 from film_crawler_spark.plans.crawl_loop import CrawlConfig, run_crawl
 from film_crawler_spark.simulator import simulate
 from film_crawler_spark.sources.synthetic_site import SiteConfig, make_seed_ids
 from film_crawler_spark.sources.tableio import TableIO
 
 
-def test_crawl_invariant_under_physical_choices(spark, tmp_path):
+def test_crawl_invariant_under_physical_choices(spark, tmp_path, monkeypatch):
     """Same crawl with the salted two-phase dequeue forced on =>
     identical fetch order, seen set and image count as the serial
     simulator (and therefore as the default-knob run, which the replay
@@ -20,14 +21,9 @@ def test_crawl_invariant_under_physical_choices(spark, tmp_path):
     site = SiteConfig(max_images_per_title=50)
     pol = PolitenessConfig(budget_html=32, budget_img=400)
     seeds = make_seed_ids(8)
-    cfg = CrawlConfig(
-        warehouse=str(tmp_path / "wh"),
-        site=site,
-        politeness=pol,
-        max_iterations=24,
-        salt_min_pending=0,  # salted dequeue always on
-        n_salts=4,
-    )
+    monkeypatch.setattr(crawl_loop, "SALT_MIN_PENDING", 0)  # salted dequeue always on
+    monkeypatch.setattr(crawl_loop, "N_SALTS", 4)
+    cfg = CrawlConfig(warehouse=str(tmp_path / "wh"), site=site, politeness=pol, max_iterations=24)
     run_crawl(spark, seeds, cfg)
     io = TableIO(spark, cfg.warehouse)
     sim = simulate(seeds, site, pol, reverse_seeds=True, max_iterations=24)

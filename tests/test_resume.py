@@ -94,7 +94,7 @@ def test_crawl_terminates_with_empty_frontier(uninterrupted):
     assert res["iterations"][-1]["pending_next"] == 0
     pending = io.read_snapshot("frontier")
     assert pending.count() == 0
-    # budget_denied never fires when dequeue caps == bucket budgets
+    # the dequeue is the only budget check: every dequeued row is fetched
     assert io.read_log("fetch_log").filter(F.col("budget_denied")).count() == 0
 
 

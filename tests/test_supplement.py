@@ -47,10 +47,8 @@ def test_supplement_appends_exactly_new_children(spark, warehouse):
     before_news = _rows(io, "news")
     flog = io.read_log("fetch_log")
     ok_pages = {
-        k: flog.filter(
-            (F.col("page_kind") == k) & (F.col("status") == 200)
-            & (~F.col("budget_denied"))
-        ).select("canon_url").distinct().count()
+        k: flog.filter((F.col("page_kind") == k) & (F.col("status") == 200))
+        .select("canon_url").distinct().count()
         for k in ("reviews", "news")
     }
     assert ok_pages["reviews"] and ok_pages["news"]

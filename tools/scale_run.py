@@ -9,7 +9,7 @@ compaction inside the short crawl). This tool runs configs that turn
 each mechanism ON and records, from the commit manifests alone:
 
 * the salted two-phase dequeue active from iteration 0
-  (pending >= salt_min_pending = 200k),
+  (pending >= crawl_loop.SALT_MIN_PENDING = 200k),
 * periodic log compaction (seen/captions staged as full bases),
 * peak frontier and seen-set size, and end-to-end fetch throughput at
   sustained politeness-budget saturation (the seen filter is one exact
@@ -242,7 +242,7 @@ def main() -> None:
         "What fired, from the manifests:",
         "",
         f"* **Salted two-phase dequeue** from iteration 0: pending "
-        f"({init_seeds:,}+) >= salt_min_pending (200,000) every iteration.",
+        f"({init_seeds:,}+) >= SALT_MIN_PENDING (200,000) every iteration.",
         # honest-by-construction: each mechanism bullet is asserted only
         # when the manifests show it fired
         (
