@@ -11,12 +11,15 @@ The resolver is pluggable: in this sandbox it is the deterministic
 SyntheticSite (no network); on a real deployment it would be an
 httpx/aiohttp client with the same (url, attempt) -> (status, bytes)
 contract — the per-host pacing and retry policy do not change. The
-per-host count budget is not checked here: the dequeue that built the
-batch already capped it, so every row this stage receives is fetched.
+per-host count budget is not checked here: the dequeue (or the
+``fetch_drain`` budget pass) that built the batch already capped it, so
+every row this stage receives is fetched.
 """
 
 from __future__ import annotations
 
+import functools
+import time
 from collections.abc import Iterator
 
 import pandas as pd
@@ -55,7 +58,7 @@ def fetch_batch(
     dequeued: DataFrame,
     site_cfg: SiteConfig,
     pol: PolitenessConfig,
-    media_parallelism: int | None = None,
+    media_parallelism: int,
 ) -> DataFrame:
     """Fetch every dequeued row. Returns frontier columns + status/kind/
     body/n_attempts/budget_denied (always false: the committed fetch_log
@@ -107,18 +110,6 @@ def fetch_batch(
 
         return _run
 
-    if media_parallelism is None:
-        # 4 tasks per core, not 1: the fetch stage is a UNION of the html
-        # and media branches, so at exactly 1 partition per core a core
-        # that draws two fat media tasks straggles while the rest idle —
-        # measured as a 2.5x (not 4x) 2->8-core speedup on a mixed
-        # html+media wave, while a pure-media wave (one balanced task
-        # wave) scaled 4.3x. Finer tasks also balance every downstream
-        # consumer of the fetched cache (fused staging, renditions,
-        # images write). The crawl loop passes an explicit value sized
-        # by its pending hint so thin iterations keep 1/core (64 near-
-        # empty partitions cost more scheduling than they save).
-        media_parallelism = 4 * dequeued.sparkSession.sparkContext.defaultParallelism
     is_blob = F.col("page_kind").isin(*MEDIA_KINDS)
     if pol.delay_s > 0:
         # rate-limited mode: one host's pages = one task, fetched in exact
@@ -153,33 +144,32 @@ def fetch_batch(
 
 
 def fetch_drain(frontier: DataFrame, cfg: SiteConfig, pol: PolitenessConfig) -> DataFrame:
-    """Budget-bounded fetch passes until the frontier drains; returns
-    every fetched row (the union across passes).
+    """Fetch a whole frontier, one budget pass at a time; returns every
+    fetched row (the union across passes).
 
-    For one-shot jobs (liveness probe, seed generators) that have no
-    crawl-iteration loop: each pass DEQUEUES at most (budget_html,
-    budget_img) rows per host — the same politeness enforcement the
-    crawl loop applies before fetching — fetches the batch, and carries
-    the remainder into the next pass. One pass over an unbounded input
-    would violate the per-host budget (and, on a wide cluster, let one
-    host take every concurrent request). Each pass fetches >= 1 row per
-    pending host, so the loop terminates; localCheckpoint truncates
-    lineage so pass i+1 never re-runs pass i's fetches. The crawl loop
-    does NOT use this — its iterations ARE the drain (T7 re-enqueue)."""
-    from film_crawler_spark.operators.frontier import dequeue, remaining
+    For one-shot jobs (liveness probe, seed generators, supplement) that
+    have no crawl-iteration loop. One window ranks the frontier once:
+    pass p holds the rows ``budget_pass`` puts in it, at most
+    (budget_html, budget_img) per host — the crawl loop's dequeue cap,
+    which also bounds one host's concurrent requests on a wide cluster.
+    Each pass is localCheckpointed (fetched exactly once); its fetch
+    tasks start fresh ``TokenBucket``s, so the driver waits ``delay_s``
+    between passes. The crawl loop does NOT use this — its iterations
+    ARE the drain (T7 re-enqueue)."""
+    from film_crawler_spark.operators.frontier import budget_pass
 
-    pending, parts = frontier, []
-    while not pending.isEmpty():
-        batch = dequeue(pending, pol.budget_html, pol.budget_img, n_salts=1)
-        fetched = fetch_batch(batch, cfg, pol).localCheckpoint(eager=True)
-        parts.append(fetched)
-        pending = remaining(pending, fetched).localCheckpoint(eager=True)
-    if not parts:
-        return fetch_batch(frontier.limit(0), cfg, pol)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    dp = frontier.sparkSession.sparkContext.defaultParallelism
+    ranked = frontier.withColumn(
+        "_pass", budget_pass(["host"], pol.budget_html, pol.budget_img)
+    ).localCheckpoint(eager=True)
+    last = ranked.agg(F.max("_pass")).first()[0] or 0  # empty frontier: one empty pass
+    parts = []
+    for p in range(last + 1):
+        if p:
+            time.sleep(pol.delay_s)
+        batch = ranked.filter(F.col("_pass") == p).drop("_pass")
+        parts.append(fetch_batch(batch, cfg, pol, dp).localCheckpoint(eager=True))
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def fetch_log_projection(fetched: DataFrame, it: int) -> DataFrame:

@@ -39,7 +39,7 @@ the result is bit-identical to a serial per-host top-B.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -171,6 +171,18 @@ def child_seq(parent_seq: str, ordinal: int) -> str:
     return f"{parent_seq}-{ordinal:06d}"
 
 
+def budget_pass(keys: list[str], budget_html: int, budget_img: int) -> Column:
+    """Each row's budget pass: its (priority, seq) rank within (keys...,
+    kind-group), floor-divided by that group's budget. Pass 0 is one
+    dequeue; pass p is the p-th dequeue of a loop that removes each
+    batch. Pages and media are separate token pools (the reference
+    throttles pages but not downloads, spiders.py:136 vs 2981-2998)."""
+    grp = F.col("page_kind").isin(*MEDIA_KINDS).cast("int")
+    cap = F.when(grp == 1, F.lit(budget_img)).otherwise(F.lit(budget_html))
+    w = Window.partitionBy(*keys, grp).orderBy(F.col("priority").asc(), F.col("seq").asc())
+    return F.floor((F.row_number().over(w) - 1) / cap)
+
+
 def dequeue(
     pending: DataFrame,
     budget_html: int,
@@ -178,32 +190,25 @@ def dequeue(
     n_salts: int = 8,
 ) -> DataFrame:
     """Exact deterministic per-host top-B by (priority asc, seq asc),
-    two-phase for skew, with per-kind budgets in ONE pass: page fetches
-    and media fetches are separate token pools (the reference throttles
-    pages but not downloads, spiders.py:136 vs 2981-2998), expressed as
-    a window over (host, kind-group) with a kind-dependent cap."""
+    two-phase for skew, with per-kind budgets in ONE pass: the rows of
+    ``budget_pass`` 0 over (host, kind-group)."""
     cols = pending.columns
-    order = [F.col("priority").asc(), F.col("seq").asc()]
-    grp = F.col("page_kind").isin(*MEDIA_KINDS).cast("int")
-    cap = F.when(grp == 1, F.lit(budget_img)).otherwise(F.lit(budget_html))
-    local = pending.withColumn("_grp", grp)
+    local = pending
     if n_salts > 1:
-        # phase 1 — per-(host, grp, salt) local top-B (superset, parallel).
+        # phase 1 — per-(host, salt, grp) local top-B (superset, parallel).
         # Worth one extra shuffle only when pending is big; the caller
         # passes n_salts=1 for small frontiers (result is identical —
         # phase 2 alone is already exact).
-        w1 = Window.partitionBy("host", "_grp", "_salt").orderBy(*order)
         local = (
             local.withColumn("_salt", F.pmod(F.hash("canon_url"), F.lit(n_salts)))
-            .withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") <= cap)
-            .drop("_rn", "_salt")
+            .withColumn("_pass", budget_pass(["host", "_salt"], budget_html, budget_img))
+            .filter(F.col("_pass") == 0)
+            .drop("_pass", "_salt")
         )
     # phase 2 — exact per-(host, grp) top-B over the bounded superset
-    w2 = Window.partitionBy("host", "_grp").orderBy(*order)
     return (
-        local.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= cap)
+        local.withColumn("_pass", budget_pass(["host"], budget_html, budget_img))
+        .filter(F.col("_pass") == 0)
         .select(*cols)
     )
 

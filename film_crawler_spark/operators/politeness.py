@@ -11,12 +11,18 @@ two:
   (host, kind-group) at its budget per iteration (salting happens inside the
   dequeue's two-phase window, so the cap is exact under skew), and
   one-shot jobs without an iteration loop get the same cap from
-  ``fetch_drain``'s per-pass dequeue. Every dequeued row is fetched;
+  ``fetch_drain``, which fetches their frontier one budget pass at a
+  time (the same window as the dequeue). Every dequeued row is fetched;
 * the *rate* (min delay between requests to one host) is kept by the
   ``TokenBucket`` — when delay_s > 0 the fetch stage routes ALL of one
   host's page requests into a single task (sorted by priority, seq), so
   the bucket is a plain in-process structure, no cross-executor
-  coordination. It only paces; it never refuses a request.
+  coordination. It only paces; it never refuses a request. A bucket
+  lives for one fetch task, so the gap between two fetch jobs is paced
+  by whoever runs them: ``fetch_drain`` sleeps ``delay_s`` between its
+  passes, but the crawl loop's iteration boundary is NOT paced (one
+  host's last request of iteration i and its first of i+1 may be
+  closer than ``delay_s``).
 
 The budget is deliberately independent of cluster parallelism: scaling
 from N to 4N executors must not multiply pressure on a host (BASELINE.md

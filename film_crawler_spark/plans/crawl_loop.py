@@ -304,8 +304,10 @@ def _iteration(spark: SparkSession, io: TableIO, cfg: CrawlConfig, it: int) -> d
     # seq/priority columns, not physical row order).
     # fetch task granularity from the driver-side pending hint: big waves
     # get 4 tasks/core (straggler-free packing of the html+media union and
-    # of every later scan of this cache), thin ones 1/core (finer would
-    # just add near-empty task scheduling) — see fetch_batch's docstring.
+    # of every later scan of this cache: at 1/core a core that drew two
+    # fat media tasks straggled — a 2.5x, not 4x, 2->8-core speedup on a
+    # mixed wave), thin ones 1/core (finer would just add near-empty task
+    # scheduling).
     dp = spark.sparkContext.defaultParallelism
     fetch_parallelism = 4 * dp if pending_hint >= 20_000 else dp
     fetched = scoped_persist(

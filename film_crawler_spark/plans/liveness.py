@@ -3,7 +3,7 @@
 The reference replays its full title and name id lists through plain
 GETs and records which now return 404 (reference spiders.py:3472-3533,
 writing 404tts.csv / 404nms.csv). The engine expresses the probe as a
-derived frontier + one fetch pass:
+derived frontier + one fetch drain:
 
     id DataFrame -> entity URL column -> frontier rows (the shared
     ``frontier_rows`` builder) -> fetch_drain (retry policy applies: a
@@ -57,10 +57,9 @@ def probe_404(
         )
     )
     dead_id = F.coalesce("tt", "nm").alias("id")
-    # fetch_drain, not one fetch_batch: the per-host politeness budget
-    # caps each pass's dequeue, so one pass over an id list longer than
-    # budget_html would break the budget. The drain dequeues and fetches
-    # capped passes until every id was probed.
+    # fetch_drain, not one fetch_batch: one fetch over an id list longer
+    # than budget_html would break the per-host politeness budget. The
+    # drain ranks the list into budget passes and fetches every pass.
     fetched = fetch_drain(frontier, cfg, pol)
     return (
         fetched.filter(F.col("status") == 404)

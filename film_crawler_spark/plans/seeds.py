@@ -11,8 +11,8 @@ The engine restates each as ONE small Spark job over the ordinary fetch
 operator (politeness + retry apply to seed production too):
 
     url list -> frontier rows (the shared ``frontier_rows`` builder) ->
-    fetch_drain (budget-capped fetch_batch passes until the list is
-    drained) -> JVM regexp_extract_all over the body ->
+    fetch_drain (the list ranked once into budget passes, fetched one
+    pass at a time) -> JVM regexp_extract_all over the body ->
     explode -> distinct -> sort -> seed DataFrame
 
 Everything after the fetch is whole-stage-codegen column work — the id

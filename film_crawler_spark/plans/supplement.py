@@ -79,11 +79,16 @@ def run_supplement(
 
     def refetch() -> dict[str, DataFrame]:
         fetched = fetch_drain(targets, cfg.site, cfg.politeness)
+        # one task per core from here on: the drain's union keeps every
+        # pass's fetch partitions (2 x cores per pass at delay 0), mostly
+        # near-empty on a small re-fetch, and each would be a task of
+        # every extract and write job and a file of every staged delta
+        dp = spark.sparkContext.defaultParallelism
         # fetched_at: this run's iteration-derived synthetic timestamp —
         # the ratings parser emits it as the reference's time_stamp column
         ok = fetched.filter(F.col("status") == 200).withColumn(
             "fetched_at", F.lit(P.synthetic_fetch_time(it))
-        )
+        ).coalesce(dp)
         new: dict[str, DataFrame] = {}
         if "reviews" in kinds:
             parsed = P.extract_reviews(ok)
@@ -120,8 +125,10 @@ def run_supplement(
         # body-free lineage of the re-fetch, same shape as the crawl's
         # fetch_log (shared projection — the two writers must never
         # drift). The URLs are already in the seen set, so no seen delta.
+        # partition_id is evaluated below the coalesce: it still names
+        # the drain partition that fetched the row.
         return {**{t: df.withColumn("iteration", F.lit(it)) for t, df in new.items()},
-                "fetch_log": fetch_log_projection(fetched, it)}
+                "fetch_log": fetch_log_projection(fetched, it).coalesce(dp)}
 
     def counted(table: str) -> tuple:
         # the appended-row count rides the write action itself: one

@@ -95,8 +95,8 @@ def test_integrity_checker(spark, tmp_path):
 
 def test_probe_404_drains_past_budget(spark):
     """An id list longer than the per-host politeness budget must still
-    probe EVERY id (fetch_drain loops passes; a single pass would report
-    the skipped tail as alive)."""
+    probe EVERY id (fetch_drain fetches every budget pass; a single pass
+    would report the skipped tail as alive)."""
     tts = [f"tt{i:07d}" for i in range(1, 400)]
     ids = spark.createDataFrame([(t,) for t in tts], "tt string")
     pol = PolitenessConfig(budget_html=16, budget_img=16)
@@ -106,7 +106,7 @@ def test_probe_404_drains_past_budget(spark):
 
 
 def test_chart_seeds_tiny_budget_complete(spark):
-    """Seed generators drain budget-denied pages too: a budget smaller
+    """Seed generators drain the pages past the budget too: a budget smaller
     than the chart-page count must not silently drop chart ids."""
     pol = PolitenessConfig(budget_html=2, budget_img=2)
     got = [r["id"] for r in SD.chart_seeds(spark, CFG, pol).collect()]

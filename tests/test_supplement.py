@@ -148,9 +148,10 @@ def test_supplement_counts_ride_the_write_jobs(spark, warehouse):
     mark = _mark(sc)
     run_supplement(spark, cfg)  # reviews + news, zero new rows
     jobs = list(_descriptions_since(sc, mark))
-    # measured at this fixture: 22 jobs (the budget-bounded fetch_drain
-    # loop's per-pass isEmpty/dequeue/checkpoint chain + one write job
-    # per staged table, counts observed in-job). The old read-back
-    # pattern adds one count job per staged table (+3 here) — the bound
-    # sits between the two.
-    assert len(jobs) <= 24, f"supplement ran {len(jobs)} jobs: {sorted(jobs)}"
+    # measured at this fixture: 15 jobs (fetch_drain's rank checkpoint,
+    # its max(_pass) job and one fetch checkpoint per budget pass, each
+    # with its AQE map-stage jobs, + the extract and write jobs, counts
+    # observed in-job). The per-pass isEmpty/dequeue/remaining drain ran
+    # 18, and the old read-back pattern adds one count job per staged
+    # table (+3 here) — the bound sits below both.
+    assert len(jobs) <= 16, f"supplement ran {len(jobs)} jobs: {sorted(jobs)}"
